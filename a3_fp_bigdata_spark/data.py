@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from a3_fp_bigdata_spark.registry import stage
+
 TABLES = (
     "region",
     "nation",
@@ -246,12 +248,6 @@ def src_fingerprint(df: DataFrame, key_col: str) -> DataFrame:
     )
 
 
-#: table_fingerprint's memo — the collected (n_src, src_ck) pair per
-#: (session, sf_dir, table, key, plan-semantic-hash). Two ints per
-#: entry; dead-session entries are harmless (the token never recurs).
-_FP_CACHE: dict[tuple, tuple[int, int]] = {}
-
-
 def table_fingerprint(
     spark: SparkSession,
     sf_dir: str,
@@ -259,7 +255,7 @@ def table_fingerprint(
     key_col: str,
     table_fn=None,
 ) -> DataFrame:
-    """Memoized ``src_fingerprint`` over a named driver table: the
+    """Session-staged ``src_fingerprint`` over a named driver table: the
     1-row (n_src, src_ck) stamp is collected ONCE per (session,
     sf_dir, table, source-plan) and re-attached as a literal
     LocalRelation.
@@ -287,28 +283,18 @@ def table_fingerprint(
     and the query goes red, never silently green), and in-session
     corpus immutability is this engine's documented contract; a flow
     that regenerates a corpus in place must call
-    ``release_fingerprints()`` (and the stage releases) first."""
-    from a3_fp_bigdata_spark.session import session_token
-
+    ``registry.release_stages()`` first."""
     src = (table_fn or table)(spark, sf_dir, table_name)
-    key = (
-        session_token(spark),
-        sf_dir,
-        table_name,
-        key_col,
-        src.semanticHash(),
-    )
-    if key not in _FP_CACHE:
+
+    def build() -> tuple[int, int]:
         row = src_fingerprint(src, key_col).first()
-        _FP_CACHE[key] = (row["n_src"], row["src_ck"])
-    n, ck = _FP_CACHE[key]
+        return row["n_src"], row["src_ck"]
+
+    n, ck = stage(
+        "fingerprint", spark,
+        (sf_dir, table_name, key_col, src.semanticHash()), build,
+    )
     return spark.createDataFrame([(n, ck)], "n_src long, src_ck long")
-
-
-def release_fingerprints() -> None:
-    """Clear table_fingerprint's stamp memo (test hygiene hook, the
-    release_shingle_stage pattern)."""
-    _FP_CACHE.clear()
 
 
 def fingerprint_where(table_name: str, key_col: str) -> str:

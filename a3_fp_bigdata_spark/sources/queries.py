@@ -308,7 +308,9 @@ def src7_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: memoized z-layout per sf_dir (bench warms it so the timed row is the
 #: pruned box SCAN, not the one-time layout write — same convention as
-#: warm_sim4_index)
+#: warm_sim4_index). Not a registry.stage(): the layout is published
+#: across processes, and when the symlink publish fails this is the
+#: process's only record of its own build.
 _ZORDER_LAYOUT: dict[str, str] = {}
 
 ZBOX_PK = (500, 900)

@@ -304,8 +304,9 @@ def main() -> None:
     # back to r01), the headline block runs twice more and
     # `value_med3` sums the per-query MEDIANS — one contention spike
     # in any single pass can no longer move the gate. Passes 2-3 run
-    # inside the same session, so session memos (sim4's index, ml
-    # fits, the SA cache) stay warm: value_med3 is the SESSION-STEADY
+    # inside the same session, so session stages stay warm (see
+    # registry.stage's docstring; bench_full.json's `stages` block
+    # counts what they reused): value_med3 is the SESSION-STEADY
     # headline, a protocol of its own — compare it to other
     # value_med3 readings only, never to pre-r14 `value`.
     HEADLINE_PASSES = 3
@@ -475,6 +476,7 @@ def main() -> None:
                 "headline_timed": headline_timed,
                 "partial": partial,
                 "sf": sf,
+                "stages": registry.stage_stats(),
                 "calib_points": calib_points,
                 "env": {
                     "pyspark": __import__("pyspark").__version__,

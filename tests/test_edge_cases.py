@@ -38,18 +38,14 @@ def test_empty_input_window_and_text(spark):
 
 @pytest.fixture
 def clean_shingle_stage():
-    """Monkeypatching dedup inputs must not read or leave a cached
-    shingle/bucket stage keyed to the real (session, sf) — clear both
-    ways (the bucket stage derives from the shingle stage)."""
-    from a3_fp_bigdata_spark.operators import dedup as D
+    """Monkeypatching dedup inputs must not read or leave a session
+    stage keyed to the real (session, sf) — shingles, buckets, clusters,
+    fits and fingerprints alike: release every stage both ways."""
+    from a3_fp_bigdata_spark import registry
 
-    D.release_bucket_stage()
-    D.release_shingle_stage()
-    D._SHINGLE_STAGE.clear()
+    registry.release_stages()
     yield
-    D.release_bucket_stage()
-    D.release_shingle_stage()
-    D._SHINGLE_STAGE.clear()
+    registry.release_stages()
 
 
 def test_empty_input_dedup_pipeline(spark, monkeypatch, clean_shingle_stage):
@@ -300,7 +296,6 @@ def test_d12_reliable_checkpoint_path(spark, monkeypatch, tmp_path):
     import os as _os
 
     from a3_fp_bigdata_spark import registry
-    from a3_fp_bigdata_spark.operators import dedup as D
 
     qs = registry.all_queries()
     want = sorted(
@@ -308,7 +303,8 @@ def test_d12_reliable_checkpoint_path(spark, monkeypatch, tmp_path):
     )
     ck = str(tmp_path / "ck")
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ck)
-    D.release_cluster_stage()  # force a rebuild under the env var
+    # force a rebuild under the env var
+    registry.release_stages("clusters", "cluster_count")
     got = sorted(
         tuple(r) for r in qs["d12_dedup_clusters"](spark, SF0001).collect()
     )
@@ -316,7 +312,8 @@ def test_d12_reliable_checkpoint_path(spark, monkeypatch, tmp_path):
     assert any(
         files for _, _, files in _os.walk(ck)
     ), "no checkpoint files written"
-    D.release_cluster_stage()  # don't leak the env-var build to others
+    # don't leak the env-var build to others
+    registry.release_stages("clusters", "cluster_count")
     registry.release_pinned()
 
 

@@ -1,9 +1,11 @@
 """Registry exposure tiers — the bounded driver sweep must always land
-on full SURVEY §2 family coverage (see registry.CANONICAL)."""
+on full SURVEY §2 family coverage (see registry.CANONICAL) — and the
+session-stage lifetime policy (registry.stage)."""
 
 from __future__ import annotations
 
 import re
+from types import SimpleNamespace
 
 from a3_fp_bigdata_spark import registry
 
@@ -150,3 +152,80 @@ def test_doc_counts_rendered_from_registry():
             assert int(m.group(1)) == n_q, (fname, m.group(0))
         for m in re.finditer(r"(\d+) oracle-backed as of round", joined):
             assert int(m.group(1)) == n_o, (fname, m.group(0))
+
+
+class _StubSession:
+    """Just enough of a SparkSession for registry.stage(): a session
+    token and a context whose ``_jsc`` goes away on stop()."""
+
+    def __init__(self, app_id: str):
+        self.sparkContext = SimpleNamespace(applicationId=app_id, _jsc=object())
+
+    def stop(self) -> None:
+        self.sparkContext._jsc = None
+
+
+def _stats(name: str) -> dict[str, int]:
+    return registry.stage_stats().get(name, {"hits": 0, "misses": 0})
+
+
+def test_stage_builds_once_per_name_session_and_key():
+    s, other = _StubSession("stub-once-1"), _StubSession("stub-once-2")
+    calls: list[str] = []
+
+    def build(v: str):
+        return lambda: calls.append(v) or v
+
+    before = _stats("t_once")
+    try:
+        assert registry.stage("t_once", s, ("x",), build("x")) == "x"
+        assert registry.stage("t_once", s, ("x",), build("x2")) == "x"
+        assert registry.stage("t_once", s, ("y",), build("y")) == "y"
+        assert registry.stage("t_once", other, ("x",), build("x3")) == "x3"
+        assert registry.stage("t_other", s, ("x",), build("o")) == "o"
+        assert calls == ["x", "y", "x3", "o"]
+        after = _stats("t_once")
+        assert after["misses"] - before["misses"] == 3
+        assert after["hits"] - before["hits"] == 1
+    finally:
+        registry.release_stages("t_once", "t_other")
+
+
+def test_stage_evicts_stopped_sessions_on_next_miss():
+    dead, live = _StubSession("stub-dead"), _StubSession("stub-live")
+    try:
+        registry.stage("t_evict", dead, (), lambda: "old")
+        registry.stage("t_evict", live, (), lambda: "kept")
+        dead.stop()
+        # a miss on any key sweeps the stopped session's entries ...
+        registry.stage("t_evict", live, ("new",), lambda: "new")
+        assert registry.stage("t_evict", dead, (), lambda: "rebuilt") == "rebuilt"
+        # ... and leaves live sessions' entries alone
+        assert registry.stage("t_evict", live, (), lambda: "rebuilt") == "kept"
+    finally:
+        registry.release_stages("t_evict")
+
+
+def test_release_stages_drops_only_named_families():
+    s = _StubSession("stub-release")
+    try:
+        registry.stage("a", s, (), lambda: "a1")
+        registry.stage("b", s, (), lambda: "b1")
+        registry.release_stages("a")
+        assert registry.stage("a", s, (), lambda: "a2") == "a2"
+        assert registry.stage("b", s, (), lambda: "b2") == "b1"
+    finally:
+        registry.release_stages("a", "b")
+
+
+def test_release_stages_unpersists_dataframe_values(spark):
+    from pyspark import StorageLevel
+
+    df = registry.stage(
+        "t_df", spark, (),
+        lambda: spark.range(10).persist(StorageLevel.MEMORY_AND_DISK),
+    )
+    assert df.count() == 10
+    assert df.storageLevel == StorageLevel.MEMORY_AND_DISK
+    registry.release_stages("t_df")
+    assert df.storageLevel == StorageLevel.NONE

@@ -79,7 +79,11 @@ def test_incremental_index_append_touches_only_new_buckets(spark, tmp_path):
         return out
 
     before = files(idx)
+    # a probe before the append stages the pre-append file listing;
+    # the append must retire it, not leave probes reading it
+    assert S._index_frame(spark, idx).count() == base.count()
     S.append_to_bucketed_index(spark, delta, SF001, idx)
+    assert S._index_frame(spark, idx).count() == emb.count()
     after = files(idx)
     for p, m in before.items():
         assert after.get(p) == m, p  # nothing pre-existing rewritten
@@ -124,17 +128,19 @@ def test_pq_codebooks_deterministic_and_codes_bounded(spark):
     PQ_M codes with K <= 16 fit nibbles (the ~21x index-shrink claim)."""
     import numpy as np
 
+    from a3_fp_bigdata_spark import registry
     from a3_fp_bigdata_spark.operators.similarity import (
-        _PQ_CB_STAGE,
         PQ_K,
         PQ_M,
         _pq_codebooks,
         _pq_encoded,
     )
 
-    _PQ_CB_STAGE.clear()  # force two REAL fits — the memo would make
-    cb1 = _pq_codebooks(spark, SF001)  # this determinism check vacuous
-    _PQ_CB_STAGE.clear()
+    # force two REAL fits — the stage would make this determinism
+    # check vacuous
+    registry.release_stages("pq_codebooks")
+    cb1 = _pq_codebooks(spark, SF001)
+    registry.release_stages("pq_codebooks")
     cb2 = _pq_codebooks(spark, SF001)
     assert cb1.shape == (PQ_M, PQ_K, 64 // PQ_M)
     assert np.array_equal(cb1, cb2)

@@ -1537,11 +1537,11 @@ def main() -> None:
     # offsets are, see d25).
     old_mod = SX.SA_DOC_MOD
     SX.SA_DOC_MOD = 15
-    # clear ALL the family's memos, not just _SA_CACHE: correctness is
-    # key-safe (SA_DOC_MOD is in every key) but mod-15 checkpoint
-    # blocks in _ROWS_CACHE/_SEG_CACHE would stay resident for the
-    # rest of a long stress session (ADVICE r14)
-    SX.release_caches()
+    # release ALL the family's stages, not just the suffix array:
+    # correctness is key-safe (SA_DOC_MOD is in every key) but mod-15
+    # checkpoint blocks in the rows/segments stages would stay resident
+    # for the rest of a long stress session (ADVICE r14)
+    registry.release_stages(*SX.STAGES)
     try:
         slice_len = len(SX.corpus_slice(spark, sf_dir).first()["s"])
         walls = {}
@@ -1570,7 +1570,7 @@ def main() -> None:
         assert n_diff == 0
     finally:
         SX.SA_DOC_MOD = old_mod
-        SX.release_caches()
+        registry.release_stages(*SX.STAGES)
 
     # ---- suffix cut rung (r15, VERDICT ask #6): d24 composes spans ->
     # offset join -> gaps-and-islands -> positional-lambda char cut;
@@ -1589,7 +1589,7 @@ def main() -> None:
     share_by_mod = {}
     for mod in (150, 15):
         SX.SA_DOC_MOD = mod
-        SX.release_caches()
+        registry.release_stages(*SX.STAGES)
         try:
             n_chars = SX.suffix_char_rows(spark, sf_dir).count()
             t0 = time.perf_counter()
@@ -1634,7 +1634,7 @@ def main() -> None:
             )
         finally:
             SX.SA_DOC_MOD = old_mod
-            SX.release_caches()
+            registry.release_stages(*SX.STAGES)
     print()
     n10, p10, s10, d10 = share_by_mod[15]
     d1x = share_by_mod[150][3]
