@@ -135,14 +135,15 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 #: Audit-scratch paths are PER-PROCESS (uid + pid in the path), not
-#: fixed per uid. The oracle SQL strings embed the path at module
-#: import, and the driver/parity/pytest harnesses each run Spark AND
+#: fixed per uid. The oracle SQL strings embed the path when they are
+#: built, and the driver/parity/pytest harnesses each run Spark AND
 #: DuckDB in one process — so a process-unique path keeps the pair
 #: consistent while making concurrent runs (pytest next to a parity
 #: sweep — observed corrupting a fixed shared scratch mid-run in
 #: round 9) physically unable to clobber each other. Cleanup: atexit
-#: removes this process's dirs; a dead-pid prune at first use per
-#: name collects dirs left by crashed processes (atexit never ran).
+#: removes this process's dirs (run_scratch and scratch_dir alike); a
+#: dead-pid prune at first use per name collects run_scratch dirs left
+#: by crashed processes (atexit never ran).
 _SCRATCH_RUN = f"uid{os.getuid()}_pid{os.getpid()}"
 _RUN_SCRATCH_DIRS: list[str] = []
 _PRUNED_NAMES: set[str] = set()
@@ -159,7 +160,7 @@ def _pid_alive(pid: int) -> bool:
 
 
 def run_scratch(name: str) -> str:
-    """Per-process scratch dir for the audit-scratch protocol:
+    """Per-process scratch dir with a stable name:
     ``$TMPDIR/a3_fp_{name}_uid{uid}_pid{pid}``. Same path for the
     Spark writer and the DuckDB oracle inside one process; distinct
     across processes. Registered for atexit removal; stale siblings
@@ -183,23 +184,25 @@ def run_scratch(name: str) -> str:
     return path
 
 
-def read_stamped_scratch(spark: SparkSession, path: str) -> DataFrame:
-    """Spark-side twin of the audit oracles' staleness guard
-    (``WHERE n_src = (SELECT count(*) ...)``) over a stamped scratch:
-    keep rows only when every row's ``n_src`` stamp equals the actual
-    row count, then drop the stamp. A torn read mixing rows from two
-    fixture generations fails the equality on at least one side and
-    disagrees loudly (row-count mismatch) instead of silently passing
-    mixed-generation bytes. The guard is one broadcast of a 1-row
-    count frame — no extra shuffle.
+def scratch_dir(prefix: str) -> str:
+    """Fresh per-call temp dir (streaming stage/output/checkpoint dirs),
+    registered for the same atexit removal as ``run_scratch``."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _RUN_SCRATCH_DIRS.append(path)
+    return path
 
-    The count-equality alone is not strictly loud: a surviving subset
-    whose row total coincidentally equals one generation's stamp (4
-    rows stamped 5 plus 1 row stamped 4 totals 5) would pass the
-    filter. The broadcast frame therefore also carries
-    countDistinct(n_src); ANY mixed-generation read (>1 distinct
-    stamp) yields zero rows unconditionally, no coincidence possible
-    (ADVICE r11)."""
+
+def read_stamped_scratch(spark: SparkSession, path: str) -> DataFrame:
+    """Spark-side twin of the count-flavour oracle guard (see
+    ``attested``) over an ``n_src``-stamped scratch: keep rows only
+    when every row's stamp equals the actual row count AND the scratch
+    holds exactly one distinct stamp, then drop the stamp. A torn read
+    mixing rows from two generations fails loudly (zero rows) instead
+    of silently passing mixed-generation bytes; the distinct-stamp half
+    closes the coincidence where a surviving subset's total equals one
+    generation's stamp (4 rows stamped 5 plus 1 row stamped 4 totals 5,
+    ADVICE r11). The guard is one broadcast of a 1-row frame — no
+    extra shuffle."""
     raw = spark.read.parquet(path)
     total = raw.agg(
         F.count("*").cast("long").alias("n_total_rows"),
@@ -213,6 +216,71 @@ def read_stamped_scratch(spark: SparkSession, path: str) -> DataFrame:
         )
         .drop("n_src", "n_total_rows", "n_generations")
     )
+
+
+def attest(
+    spark: SparkSession,
+    name: str,
+    df: DataFrame,
+    stamp: DataFrame | None = None,
+) -> DataFrame:
+    """The audit-scratch protocol's Spark half: stamp ``df``'s rows,
+    write them to ``run_scratch(name)`` and return a fresh read-back
+    without the stamp columns. ``attested(name, ...)`` is the DuckDB
+    half: the oracle reads the SAME bytes, so an engine-specific step
+    (a hash, a sketch, a model score, a decoded pixel) is materialized
+    once and everything downstream is re-derived independently by both
+    engines.
+
+    Two stamp flavours:
+
+    - ``stamp`` = ``table_fingerprint(...)``'s 1-row (n_src, src_ck)
+      frame of the source table. The oracle keeps rows only when both
+      equal the fingerprint of ITS live view of that table, so scratch
+      from a different sf (10x counts) or a regenerated same-
+      cardinality corpus (checksum differs) yields an empty oracle side
+      and a red mismatch, never a false pass.
+    - ``stamp=None``: n_src = the frame's own count(*), for sources the
+      oracle cannot read (fixture directories, streaming state, a
+      holdout split). Both halves keep rows only when the stamp equals
+      the row count and is the scratch's single distinct stamp
+      (``read_stamped_scratch``), so a torn read of two generations
+      disagrees loudly on either side.
+
+    The write is ``repartition(1)``, not ``coalesce(1)``: coalesce pulls
+    the single-partition constraint into the upstream stage and runs
+    the whole producing plan in one task. The caller pins ``df`` when it
+    is costly and also feeds the count stamp, and pins the read-back
+    when it is referenced twice. Not cryptographic: a fingerprint
+    scoped to stale/foreign scratch, not adversarial collisions."""
+    path = run_scratch(name)
+    counted = stamp is None
+    if counted:
+        stamp = df.agg(F.count("*").cast("long").alias("n_src"))
+    df.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+    if counted:
+        return read_stamped_scratch(spark, path)
+    return spark.read.parquet(path).drop("n_src", "src_ck")
+
+
+def attested(
+    name: str, table: str | None = None, key: str | None = None
+) -> str:
+    """The audit-scratch protocol's DuckDB half (see ``attest``): one
+    parenthesized FROM-item over ``run_scratch(name)``, guarded by
+    ``fingerprint_where(table, key)`` or, with no table, by the count
+    flavour's single-generation guard."""
+    src = f"read_parquet('{run_scratch(name)}/*.parquet')"
+    if table is None:
+        guard = (
+            f"n_src = (SELECT count(*) FROM {src})"
+            f" AND 1 = (SELECT count(DISTINCT n_src) FROM {src})"
+        )
+    else:
+        guard = fingerprint_where(table, key)
+    return f"(SELECT * FROM {src} WHERE {guard})"
 
 
 def _cleanup_run_scratch() -> None:

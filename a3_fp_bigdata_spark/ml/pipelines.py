@@ -40,8 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import (
-    fingerprint_where,
-    run_scratch,
+    attest,
+    attested,
     table_fingerprint,
     table,
 )
@@ -206,15 +206,11 @@ def _fit(
 # ---------------------------------------------------------------------------
 
 
-_ML1_ASSIGN_SCRATCH = run_scratch("ml1_assignments")
-
-
 @query(
     "ml1_cluster_sizes",
     oracle=f"""
     SELECT cluster, CAST(count(*) AS BIGINT) AS n
-    FROM read_parquet('{_ML1_ASSIGN_SCRATCH}/*.parquet')
-    WHERE {fingerprint_where('customer', 'c_custkey')}
+    FROM {attested('ml1_assignments', 'customer', 'c_custkey')}
     GROUP BY cluster
     ORDER BY cluster
     """,
@@ -233,10 +229,9 @@ def ml1_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-cluster/coverage invariants (no SQL oracle can exist for the
     fit)."""
     final, _, _, _ = fit_transform(spark, sf_dir)
-    back = _write_fingerprinted(
-        final.select("c_custkey", "cluster"), spark, sf_dir,
-        _ML1_ASSIGN_SCRATCH,
-    )
+    fp = table_fingerprint(spark, sf_dir, "customer", "c_custkey", table_fn=table)
+    assigned = final.select("c_custkey", "cluster")
+    back = attest(spark, "ml1_assignments", assigned, fp)
     return (
         back.groupBy("cluster")
         .agg(F.count("*").alias("n"))
@@ -244,44 +239,17 @@ def ml1_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: ml2/ml3 scratch (r13, VERDICT ask #5): the model OUTPUTS — the only
-#: seed/impl-specific values — materialize to fingerprinted scratch;
-#: everything DOWNSTREAM of the fit (ml2's ranked score-table
-#: selection, ml3's RMSE aggregation) is re-derived independently by
-#: both engines from the same materialized predictions, so the
-#: aggregation surface is value-attested even though the fit itself
-#: admits no SQL oracle. Same division of labor as ml5's calibration
-#: audit, promoted onto the queries themselves.
-_ML2_SCORED_SCRATCH = run_scratch("ml2_scored")
-_ML3_PRED_SCRATCH = run_scratch("ml3_preds")
-
 _ML2_COLS = (
     "c_custkey", "c_acctbal", CATEGORICAL, "order_cnt",
     "total_spent", "avg_order", "cluster", "PredictedRating",
 )
 
 
-def _write_fingerprinted(df: DataFrame, spark, sf_dir: str, scratch: str):
-    """Stamp rows with the CUSTOMER table's (count, key-checksum)
-    fingerprint and overwrite the scratch — stale/foreign scratch
-    yields an empty oracle side and a red mismatch, never a false
-    PASS. Returns the read-back with the stamp dropped."""
-    fp = table_fingerprint(spark, sf_dir, "customer", "c_custkey", table_fn=table)
-    # no pin: the frame feeds exactly ONE write (the read-back is a
-    # fresh scan of the scratch) — persisting a single-consumer frame
-    # just burns executor memory (ADVICE r13)
-    df.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(scratch)
-    return spark.read.parquet(scratch).drop("n_src", "src_ck")
-
-
 @query(
     "ml2_rf_score_table",
     oracle=f"""
     SELECT {", ".join(_ML2_COLS)}
-    FROM read_parquet('{_ML2_SCORED_SCRATCH}/*.parquet')
-    WHERE {fingerprint_where('customer', 'c_custkey')}
+    FROM {attested('ml2_scored', 'customer', 'c_custkey')}
     ORDER BY c_acctbal DESC NULLS LAST, c_custkey
     LIMIT 20
     """,
@@ -297,7 +265,8 @@ def ml2_rf_score_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the same total order and LIMIT independently, so the
     selection surface (sort keys, tie-break, cut) is value-attested."""
     final, _, _, _ = fit_transform(spark, sf_dir)
-    back = _write_fingerprinted(final, spark, sf_dir, _ML2_SCORED_SCRATCH)
+    fp = table_fingerprint(spark, sf_dir, "customer", "c_custkey", table_fn=table)
+    back = attest(spark, "ml2_scored", final, fp)
     # desc_nulls_last EXPLICITLY: Spark's desc already sorts nulls
     # last, but DuckDB's DESC puts them FIRST — both sides pin the
     # same null placement so the total order can't diverge if the
@@ -322,8 +291,7 @@ _ML3_MICRO = 1_000_000
     oracle=f"""
     WITH p AS (
       SELECT label_micro, pred_micro
-      FROM read_parquet('{_ML3_PRED_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('customer', 'c_custkey')}
+      FROM {attested('ml3_preds', 'customer', 'c_custkey')}
     ), d AS (
       -- plain multiplication, NOT power(x,2): IEEE mandates correctly-
       -- rounded *, so both engines get the same double bit-for-bit;
@@ -366,7 +334,8 @@ def ml3_training_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("pred_micro"),
     )
-    back = _write_fingerprinted(pairs, spark, sf_dir, _ML3_PRED_SCRATCH)
+    fp = table_fingerprint(spark, sf_dir, "customer", "c_custkey", table_fn=table)
+    back = attest(spark, "ml3_preds", pairs, fp)
     e_d = (
         (F.col("label_micro") - F.col("pred_micro")).cast("double")
         / _ML3_MICRO

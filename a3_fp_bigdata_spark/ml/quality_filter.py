@@ -36,7 +36,12 @@ from pyspark.ml.feature import HashingTF, IDF
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import run_scratch, table
+from a3_fp_bigdata_spark.data import (
+    attest,
+    attested,
+    table,
+    table_fingerprint,
+)
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
 from a3_fp_bigdata_spark.operators.text_analysis import sample_predicate
@@ -119,13 +124,22 @@ def _fit(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, PipelineModel]:
     return scored, model
 
 
-_ML4_SCORE_SCRATCH = run_scratch("ml4_scores")
+def _ml4_oracle() -> str:
+    mean_sql = half_up_sql(
+        "CAST(sum(p_micro) AS DOUBLE) / CAST(1000000 AS DOUBLE)"
+        " / count(*)", 2
+    )
+    return f"""
+    SELECT in_fit, label, keep,
+           CAST(count(*) AS BIGINT) AS n,
+           {mean_sql} AS mean_p
+    FROM {attested('ml4_scores', 'documents', 'doc_id')}
+    GROUP BY in_fit, label, keep
+    ORDER BY in_fit, label, keep
+    """
 
 
-@query(
-    "ml4_quality_filter",
-    oracle=None,  # attached below (needs data.fingerprint_where)
-)
+@query("ml4_quality_filter", oracle=_ml4_oracle)
 def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion report of the model-based quality filter against its
     weak-supervision label, split by fit/holdout membership: one row
@@ -141,8 +155,6 @@ def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derive the confusion cells (exact int64 counts + micro-sum, one
     shared division construction, half_up to 2 decimals). The fit
     itself stays pinned by pytest's holdout-accuracy floor."""
-    from a3_fp_bigdata_spark.data import table, table_fingerprint
-
     scored, _ = fit_score(spark, sf_dir)
     rows = scored.select(
         "doc_id",
@@ -154,10 +166,7 @@ def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("p_micro"),
     )
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    rows.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_ML4_SCORE_SCRATCH)
-    back = spark.read.parquet(_ML4_SCORE_SCRATCH).drop("n_src", "src_ck")
+    back = attest(spark, "ml4_scores", rows, fp)
     return (
         back.groupBy("in_fit", "label", "keep")
         .agg(
@@ -171,44 +180,6 @@ def ml4_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _attach_ml4_oracle() -> None:
-    """Deferred like st13's: renders data.py's fingerprint snippet."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.data import fingerprint_where
-
-    mean_sql = half_up_sql(
-        "CAST(sum(p_micro) AS DOUBLE) / CAST(1000000 AS DOUBLE)"
-        " / count(*)", 2
-    )
-    sql = f"""
-    SELECT in_fit, label, keep,
-           CAST(count(*) AS BIGINT) AS n,
-           {mean_sql} AS mean_p
-    FROM read_parquet('{_ML4_SCORE_SCRATCH}/*.parquet')
-    WHERE {fingerprint_where('documents', 'doc_id')}
-    GROUP BY in_fit, label, keep
-    ORDER BY in_fit, label, keep
-    """
-    rq = _R._REGISTRY["ml4_quality_filter"]
-    if rq.oracle is None:
-        _R._REGISTRY["ml4_quality_filter"] = dataclasses.replace(
-            rq, oracle=sql
-        )
-
-
-_attach_ml4_oracle()
-
-
-#: ml5 scratch — the audit-scratch protocol (mm7/mm9): Spark
-#: materializes the model's scores in EXACT integer micro-units, and
-#: DuckDB re-derives the calibration table from the same bytes. The
-#: per-process run_scratch path removes the concurrent-writer hazard;
-#: n_src is still stamped so a torn read across generations within one
-#: process disagrees loudly.
-_ML5_SCRATCH = run_scratch("ml5_calib")
-
 #: Reliability binning: micro-unit scores 0..1_000_000 into 10 equal
 #: probability bins, the top edge folded into bin 9.
 _ML5_NBINS = 10
@@ -219,11 +190,8 @@ _ML5_BIN_WIDTH_U = 1_000_000 // _ML5_NBINS
     "ml5_calibration_audit",
     oracle=f"""
     WITH s AS (
-      SELECT label_i, p_u
-      FROM read_parquet('{_ML5_SCRATCH}/*.parquet')
+      SELECT label_i, p_u FROM {attested('ml5_calib')}
       WHERE in_fit = 0
-        AND n_src = (SELECT count(*)
-                     FROM read_parquet('{_ML5_SCRATCH}/*.parquet'))
     )
     SELECT CAST(least(p_u // {_ML5_BIN_WIDTH_U}, {_ML5_NBINS - 1})
                 AS INT) AS bin,
@@ -274,12 +242,8 @@ def ml5_calibration_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("p_u"),
     )
-    stamp = holdout.agg(F.count("*").cast("long").alias("n_src"))
-    holdout.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_ML5_SCRATCH)
     s = (
-        spark.read.parquet(_ML5_SCRATCH)
+        attest(spark, "ml5_calib", holdout)
         .filter(F.col("in_fit") == 0)
         .select("label_i", "p_u")
     )

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import run_scratch
+from a3_fp_bigdata_spark.data import attest, attested
 from a3_fp_bigdata_spark.pickling import ship_by_value
 from a3_fp_bigdata_spark.registry import query
 
@@ -166,8 +166,6 @@ def sample_rows(media: DataFrame) -> DataFrame:
     )
 
 
-_MM5_SAMPLE_SCRATCH = run_scratch("mm5_samples")
-
 #: rounding scale for the float features (matches the historical
 #: round(x, 6) in extract_audio_features)
 _AUDIO_ROUND = 6
@@ -176,7 +174,6 @@ _AUDIO_ROUND = 6
 def _mm5_oracle() -> str:
     from a3_fp_bigdata_spark.functions.rounding import half_up_sql
 
-    src = f"read_parquet('{_MM5_SAMPLE_SCRATCH}/*.parquet')"
     dur = half_up_sql("(max(idx) + 1) / CAST(max(sr) AS DOUBLE)", _AUDIO_ROUND)
     rms = half_up_sql(
         "sqrt(CAST(sum(pcm * pcm) AS BIGINT)"
@@ -186,9 +183,7 @@ def _mm5_oracle() -> str:
     peak = half_up_sql("max(abs(pcm)) / CAST(max(denom) AS DOUBLE)", _AUDIO_ROUND)
     return f"""
     WITH s AS (
-      SELECT * FROM {src}
-      WHERE n_src = (SELECT count(*) FROM {src})
-        AND 1 = (SELECT count(DISTINCT n_src) FROM {src})
+      SELECT * FROM {attested('mm5_samples')}
     )
     SELECT media_id,
            {dur} AS duration_s,
@@ -205,7 +200,7 @@ def mm5_audio_dir_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """binaryFile scan of the committed WAV fixtures -> REAL stdlib
     decode -> per-clip features. ORACLE-BACKED since r12 (was
     rows-only): the decode materializes per-sample integer PCM rows to
-    fingerprinted scratch (sample_rows) and BOTH engines re-derive
+    count-stamped scratch (sample_rows) and BOTH engines re-derive
     duration/sample_rate/channels/RMS/peak from the same exact int64
     bytes — sums of pcm and pcm^2 are exact integers, the single
     division and sqrt are correctly rounded, and the half_up(6)
@@ -213,20 +208,15 @@ def mm5_audio_dir_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregation is bit-identical. The waveform VALUES stay pinned
     by pytest against the generator's analytic signals
     (tools/make_wav_fixtures.py: sine RMS = A/sqrt(2), square = A)."""
-    from a3_fp_bigdata_spark.data import read_stamped_scratch
     from a3_fp_bigdata_spark.functions.rounding import half_up
-    from a3_fp_bigdata_spark.multimodal.binary_files import (
-        _write_stamped,
-        image_dir_source,
-    )
+    from a3_fp_bigdata_spark.multimodal.binary_files import image_dir_source
     from a3_fp_bigdata_spark.registry import pin
 
     media = image_dir_source(spark, FIXTURE_DIR, glob="*.wav").withColumn(
         "media_type", F.lit("audio/wav")  # source labels by extension
     )
     samples = pin(sample_rows(media))  # decode once: stamp + scratch
-    _write_stamped(samples, _MM5_SAMPLE_SCRATCH)
-    back = read_stamped_scratch(spark, _MM5_SAMPLE_SCRATCH)
+    back = attest(spark, "mm5_samples", samples)
     per = back.groupBy("media_id").agg(
         (F.max("idx") + 1).alias("nf"),
         F.max("sr").alias("srate"),

@@ -40,7 +40,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import read_stamped_scratch, run_scratch
+from a3_fp_bigdata_spark.data import (
+    attest,
+    attested,
+    read_stamped_scratch,
+    run_scratch,
+)
 from a3_fp_bigdata_spark.multimodal.audio import decode_wav
 from a3_fp_bigdata_spark.pickling import ship_by_value
 from a3_fp_bigdata_spark.registry import pin, query
@@ -118,26 +123,11 @@ def audio_fp_features(media: DataFrame) -> DataFrame:
     )
 
 
-#: mm9 scratch — the audit-scratch pattern mm7 documents: the source
-#: is the committed fixture directory (which DuckDB cannot read), and
-#: the fingerprint bytes are fixture-deterministic, so the only live
-#: hazard was a TORN read from a CONCURRENT process's rewrite — the
-#: per-process run_scratch path removes that writer entirely. n_src
-#: is stamped and BOTH engines enforce it symmetrically: the oracle's
-#: WHERE n_src = count(*) and the Spark read-back's
-#: read_stamped_scratch (r11, closing the r10 asymmetry where only
-#: the oracle self-healed torn reads).
-_MM9_AFP_SCRATCH = run_scratch("mm9_afp")
-
-
 @query(
     "mm9_audio_near_dup",
     oracle=f"""
     WITH h AS (
-      SELECT media_id, afp
-      FROM read_parquet('{_MM9_AFP_SCRATCH}/*.parquet')
-      WHERE n_src = (SELECT count(*)
-                     FROM read_parquet('{_MM9_AFP_SCRATCH}/*.parquet'))
+      SELECT media_id, afp FROM {attested('mm9_afp')}
     )
     SELECT a.media_id AS media_a, b.media_id AS media_b,
            CAST(bit_count(xor(a.afp, b.afp)) AS INT) AS hamming
@@ -177,13 +167,8 @@ def mm9_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin: the decode+hash frame feeds both the count stamp and the
     # scratch rows (without it the mapInPandas decode runs twice)
     hashes = pin(audio_fp_features(media).select("media_id", "afp"))
-    stamp = hashes.agg(F.count("*").cast("long").alias("n_src"))
-    hashes.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_MM9_AFP_SCRATCH)
     fps = pin(
-        read_stamped_scratch(spark, _MM9_AFP_SCRATCH)
-        .select(
+        attest(spark, "mm9_afp", hashes).select(
             F.col("media_id").alias("doc_id"),
             F.col("afp").alias("simhash"),
         )
@@ -204,10 +189,7 @@ def mm9_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mm10_audio_dedup_clusters",
     oracle=f"""
     WITH RECURSIVE h AS (
-      SELECT media_id, afp
-      FROM read_parquet('{_MM9_AFP_SCRATCH}/*.parquet')
-      WHERE n_src = (SELECT count(*)
-                     FROM read_parquet('{_MM9_AFP_SCRATCH}/*.parquet'))
+      SELECT media_id, afp FROM {attested('mm9_afp')}
     ), pairs AS (
       SELECT a.media_id AS ma, b.media_id AS mb
       FROM h a JOIN h b ON a.media_id < b.media_id
@@ -256,7 +238,9 @@ def mm10_audio_dedup_clusters(
         F.col("media_b").alias("doc_b"),
     )
     labels, _ = connected_components(spark, pairs)
-    all_media = read_stamped_scratch(spark, _MM9_AFP_SCRATCH).select("media_id")
+    all_media = read_stamped_scratch(spark, run_scratch("mm9_afp")).select(
+        "media_id"
+    )
     cluster = F.coalesce(F.col("lab"), F.col("media_id"))
     return all_media.join(
         labels.withColumnRenamed("doc_id", "media_id"), "media_id", "left"

@@ -23,7 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import read_stamped_scratch, run_scratch
+from a3_fp_bigdata_spark.data import attest, attested
 from a3_fp_bigdata_spark.multimodal.images import extract_features
 from a3_fp_bigdata_spark.registry import pin, query
 
@@ -62,8 +62,8 @@ def image_dir_source(
 # ---------------------------------------------------------------------------
 # Scratch-oracle attestation for the fixture-directory feature queries
 # (r12, VERDICT ask #3): the decoded image explodes to per-pixel
-# INTEGER rows (images.pixel_rows) materialized to a fingerprinted
-# scratch; Spark derives the per-image features from the read-back via
+# INTEGER rows (images.pixel_rows) materialized to a count-stamped
+# attested scratch; Spark derives the per-image features from the read-back via
 # groupBy/avg/max while DuckDB re-aggregates the SAME bytes with its
 # own SQL — the feature derivation (means, dimensions) is
 # cross-checked engine-vs-engine, and the decoded pixel VALUES stay
@@ -76,23 +76,18 @@ def image_dir_source(
 # ---------------------------------------------------------------------------
 
 
-def _pixel_scratch_sql(scratch: str) -> str:
-    """Shared oracle CTE over a stamped pixel scratch: single-
-    generation guard (count equality + distinct-stamp, matching
-    read_stamped_scratch's strictness), then per-image re-aggregation."""
-    src = f"read_parquet('{scratch}/*.parquet')"
+def _pixel_scratch_sql(name: str) -> str:
+    """Shared oracle CTE ``px`` over an attested pixel scratch."""
     return f"""
     WITH px AS (
-      SELECT * FROM {src}
-      WHERE n_src = (SELECT count(*) FROM {src})
-        AND 1 = (SELECT count(DISTINCT n_src) FROM {src})
+      SELECT * FROM {attested(name)}
     )
     """
 
 
-def _image_features_oracle(scratch: str) -> str:
+def _image_features_oracle(name: str) -> str:
     return (
-        _pixel_scratch_sql(scratch)
+        _pixel_scratch_sql(name)
         + """
     SELECT media_id,
            avg(r) AS img_avg_red,
@@ -105,24 +100,14 @@ def _image_features_oracle(scratch: str) -> str:
     )
 
 
-def _write_stamped(df: DataFrame, scratch: str) -> None:
-    """Stamp every row with the frame's total count and overwrite the
-    scratch (the mm7 protocol: a torn/stale read disagrees loudly)."""
-    stamp = df.agg(F.count("*").cast("long").alias("n_src"))
-    df.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(scratch)
-
-
 def _attested_image_features(
-    spark: SparkSession, fixture_dir: str, glob: str, scratch: str
+    spark: SparkSession, fixture_dir: str, glob: str, name: str
 ) -> DataFrame:
     from a3_fp_bigdata_spark.multimodal.images import pixel_rows
 
     media = image_dir_source(spark, fixture_dir, glob=glob)
     px = pin(pixel_rows(media))  # decode once: feeds stamp + scratch
-    _write_stamped(px, scratch)
-    back = read_stamped_scratch(spark, scratch)
+    back = attest(spark, name, px)
     return (
         back.groupBy("media_id")
         .agg(
@@ -140,15 +125,14 @@ def _attested_frame_features(
     spark: SparkSession,
     fixture_dir: str,
     glob: str,
-    scratch: str,
+    name: str,
     decode_frames,
 ) -> DataFrame:
     from a3_fp_bigdata_spark.multimodal.images import frame_pixel_rows
 
     media = image_dir_source(spark, fixture_dir, glob=glob)
     px = pin(frame_pixel_rows(media, decode_frames))
-    _write_stamped(px, scratch)
-    back = read_stamped_scratch(spark, scratch)
+    back = attest(spark, name, px)
     return (
         back.groupBy("media_id", "frame_idx")
         .agg(
@@ -167,9 +151,9 @@ def _attested_frame_features(
     )
 
 
-def _frame_features_oracle(scratch: str) -> str:
+def _frame_features_oracle(name: str) -> str:
     return (
-        _pixel_scratch_sql(scratch)
+        _pixel_scratch_sql(name)
         + """
     SELECT media_id, frame_idx,
            CAST(max(n_frames) AS INT) AS n_frames,
@@ -183,19 +167,9 @@ def _frame_features_oracle(scratch: str) -> str:
     )
 
 
-_MM4_PX_SCRATCH = run_scratch("mm4_px")
-_MM15_PX_SCRATCH = run_scratch("mm15_px")
-_MM16_PX_SCRATCH = run_scratch("mm16_px")
-_MM17_PX_SCRATCH = run_scratch("mm17_px")
-_MM6_PX_SCRATCH = run_scratch("mm6_px")
-_MM12_PX_SCRATCH = run_scratch("mm12_px")
-_MM13_PX_SCRATCH = run_scratch("mm13_px")
-_MM14_PX_SCRATCH = run_scratch("mm14_px")
-
-
 @query(
     "mm4_image_dir_features",
-    oracle=_image_features_oracle(_MM4_PX_SCRATCH),
+    oracle=_image_features_oracle("mm4_px"),
 )
 def mm4_image_dir_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end reference shape (feature_extractor.py:15-34): scan an
@@ -205,18 +179,18 @@ def mm4_image_dir_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     first frame, PIL's convert('RGB') behavior).
 
     ORACLE-BACKED since r12 (was rows-only): the decode materializes
-    per-pixel integer rows to fingerprinted scratch and BOTH engines
+    per-pixel integer rows to stamped scratch and BOTH engines
     re-aggregate means/dims from the same bytes independently — a
     broken aggregation or torn scratch is a red hash mismatch; the
     pixel values themselves stay pinned by the pytest goldens."""
     return _attested_image_features(
-        spark, FIXTURE_DIR, "*.{png,jpg,jpeg,gif}", _MM4_PX_SCRATCH
+        spark, FIXTURE_DIR, "*.{png,jpg,jpeg,gif}", "mm4_px"
     )
 
 
 @query(
     "mm6_gif_frame_features",
-    oracle=_frame_features_oracle(_MM6_PX_SCRATCH),
+    oracle=_frame_features_oracle("mm6_px"),
 )
 def mm6_gif_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over a REAL container format: binaryFile-scan the
@@ -227,13 +201,13 @@ def mm6_gif_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame_sample's synthetic fixed-stride payloads.
 
     ORACLE-BACKED since r12 (was rows-only): per-frame pixel rows land
-    in fingerprinted scratch; Spark and DuckDB re-derive the per-frame
+    in stamped scratch; Spark and DuckDB re-derive the per-frame
     features independently (see _attested_frame_features); pytest pins
     the composited frame pixels against the generator."""
     from a3_fp_bigdata_spark.multimodal.gif_codec import decode_gif_frames
 
     return _attested_frame_features(
-        spark, FIXTURE_DIR, "*.gif", _MM6_PX_SCRATCH, decode_gif_frames
+        spark, FIXTURE_DIR, "*.gif", "mm6_px", decode_gif_frames
     )
 
 
@@ -249,7 +223,7 @@ MODERN_FIXTURE_DIR = os.path.join(
 
 @query(
     "mm12_modern_format_features",
-    oracle=_image_features_oracle(_MM12_PX_SCRATCH),
+    oracle=_image_features_oracle("mm12_px"),
 )
 def mm12_modern_format_features(
     spark: SparkSession, sf_dir: str
@@ -264,7 +238,7 @@ def mm12_modern_format_features(
     decode drift in either codec is a red golden, not a silent
     feature shift."""
     return _attested_image_features(
-        spark, MODERN_FIXTURE_DIR, "*.{jpg,webp}", _MM12_PX_SCRATCH
+        spark, MODERN_FIXTURE_DIR, "*.{jpg,webp}", "mm12_px"
     )
 
 
@@ -281,7 +255,7 @@ APNG_FIXTURE_DIR = os.path.join(
 
 @query(
     "mm13_apng_frame_features",
-    oracle=_frame_features_oracle(_MM13_PX_SCRATCH),
+    oracle=_frame_features_oracle("mm13_px"),
 )
 def mm13_apng_frame_features(
     spark: SparkSession, sf_dir: str
@@ -302,7 +276,7 @@ def mm13_apng_frame_features(
     )
 
     return _attested_frame_features(
-        spark, APNG_FIXTURE_DIR, "*.png", _MM13_PX_SCRATCH,
+        spark, APNG_FIXTURE_DIR, "*.png", "mm13_px",
         decode_apng_frames,
     )
 
@@ -318,7 +292,7 @@ LOSSY_WEBP_FIXTURE_DIR = os.path.join(
 
 @query(
     "mm16_lossy_webp_features",
-    oracle=_image_features_oracle(_MM16_PX_SCRATCH),
+    oracle=_image_features_oracle("mm16_px"),
 )
 def mm16_lossy_webp_features(
     spark: SparkSession, sf_dir: str
@@ -333,7 +307,7 @@ def mm16_lossy_webp_features(
     committed bytes. ORACLE-BACKED from birth via the shared
     pixel-scratch protocol (see _attested_image_features)."""
     return _attested_image_features(
-        spark, LOSSY_WEBP_FIXTURE_DIR, "*.webp", _MM16_PX_SCRATCH
+        spark, LOSSY_WEBP_FIXTURE_DIR, "*.webp", "mm16_px"
     )
 
 
@@ -348,7 +322,7 @@ ALPHA_WEBP_FIXTURE_DIR = os.path.join(
 
 @query(
     "mm17_alpha_webp_features",
-    oracle=_pixel_scratch_sql(_MM17_PX_SCRATCH)
+    oracle=_pixel_scratch_sql("mm17_px")
     + """
     SELECT media_id,
            avg(r) AS img_avg_red,
@@ -415,8 +389,7 @@ def mm17_alpha_webp_features(
             schema="media_id long, y int, x int, r int, g int, b int, a int",
         )
     )
-    _write_stamped(px, _MM17_PX_SCRATCH)
-    back = read_stamped_scratch(spark, _MM17_PX_SCRATCH)
+    back = attest(spark, "mm17_px", px)
     return (
         back.groupBy("media_id")
         .agg(
@@ -431,15 +404,13 @@ def mm17_alpha_webp_features(
     )
 
 
-_MM19_PX_SCRATCH = run_scratch("mm19_px")
-
 #: resize attestation target (mm19): 8x8 like mm3's probe
 _RS_OUT = 8
 
 
 def _mm19_oracle() -> str:
     return (
-        _pixel_scratch_sql(_MM19_PX_SCRATCH)
+        _pixel_scratch_sql("mm19_px")
         + f"""
     , dims AS (
       SELECT media_id, max(y) + 1 AS h, max(x) + 1 AS w
@@ -484,11 +455,10 @@ def mm19_resize_attested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = image_dir_source(spark, FIXTURE_DIR, glob="*.png")
     px = pin(pixel_rows(media))
-    _write_stamped(px, _MM19_PX_SCRATCH)
     # the read-back feeds BOTH the dims aggregate and the sample join:
     # pin it, or the scan + stamp-guard run twice (d9's measured
     # multi-reference rule)
-    back = pin(read_stamped_scratch(spark, _MM19_PX_SCRATCH))
+    back = pin(attest(spark, "mm19_px", px))
     dims = back.groupBy("media_id").agg(
         (F.max("y") + 1).alias("h"), (F.max("x") + 1).alias("w")
     )
@@ -543,12 +513,9 @@ ANIM_WEBP_FIXTURE_DIR = os.path.join(
     os.path.dirname(__file__), "fixtures", "anim_webp"
 )
 
-_MM18_PX_SCRATCH = run_scratch("mm18_px")
-
-
 @query(
     "mm18_anim_webp_features",
-    oracle=_frame_features_oracle(_MM18_PX_SCRATCH),
+    oracle=_frame_features_oracle("mm18_px"),
 )
 def mm18_anim_webp_features(
     spark: SparkSession, sf_dir: str
@@ -568,7 +535,7 @@ def mm18_anim_webp_features(
     )
 
     return _attested_frame_features(
-        spark, ANIM_WEBP_FIXTURE_DIR, "*.webp", _MM18_PX_SCRATCH,
+        spark, ANIM_WEBP_FIXTURE_DIR, "*.webp", "mm18_px",
         decode_webp_frames,
     )
 
@@ -593,7 +560,7 @@ ICO_FIXTURE_DIR = os.path.join(
 
 @query(
     "mm15_favicon_features",
-    oracle=_image_features_oracle(_MM15_PX_SCRATCH),
+    oracle=_image_features_oracle("mm15_px"),
 )
 def mm15_favicon_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mm4's binaryFile->decode->featurize shape over ICO — the
@@ -605,13 +572,13 @@ def mm15_favicon_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see _attested_image_features); pytest pins the exact channel
     means against the generator's own expected arrays."""
     return _attested_image_features(
-        spark, ICO_FIXTURE_DIR, "*.ico", _MM15_PX_SCRATCH
+        spark, ICO_FIXTURE_DIR, "*.ico", "mm15_px"
     )
 
 
 @query(
     "mm14_archival_tiff_features",
-    oracle=_image_features_oracle(_MM14_PX_SCRATCH),
+    oracle=_image_features_oracle("mm14_px"),
 )
 def mm14_archival_tiff_features(
     spark: SparkSession, sf_dir: str
@@ -626,5 +593,5 @@ def mm14_archival_tiff_features(
     arrays, so an LZW width-change or predictor bug is a red golden,
     not a silent feature shift."""
     return _attested_image_features(
-        spark, ARCHIVAL_FIXTURE_DIR, "*.tif", _MM14_PX_SCRATCH
+        spark, ARCHIVAL_FIXTURE_DIR, "*.tif", "mm14_px"
     )

@@ -38,7 +38,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import read_stamped_scratch, run_scratch
+from a3_fp_bigdata_spark.data import (
+    attest,
+    attested,
+    read_stamped_scratch,
+    run_scratch,
+)
 from a3_fp_bigdata_spark.multimodal.images import decode_image, resize_nn
 from a3_fp_bigdata_spark.pickling import ship_by_value
 from a3_fp_bigdata_spark.registry import query
@@ -132,27 +137,11 @@ def phash_features(media: DataFrame) -> DataFrame:
     )
 
 
-#: mm7 scratch — the audit-scratch pattern (per-process run_scratch path the oracle
-#: SQL can name). The d4/d9-style (n_src, src_ck) STALENESS guard has
-#: no live anchor here: the source is the committed fixture directory,
-#: which DuckDB cannot read, and the hash bytes are fixture-
-#: deterministic (same files -> same rows from any process), so a
-#: concurrent writer produces identical bytes rather than foreign
-#: ones. n_src is still stamped, and since r11 BOTH engines enforce
-#: it symmetrically (the oracle's WHERE n_src = count(*), the Spark
-#: read-back's read_stamped_scratch), so a TORN read — rows from two
-#: different fixture generations — disagrees loudly on either side.
-_MM7_PHASH_SCRATCH = run_scratch("mm7_phash")
-
-
 @query(
     "mm7_image_near_dup",
     oracle=f"""
     WITH h AS (
-      SELECT media_id, dhash
-      FROM read_parquet('{_MM7_PHASH_SCRATCH}/*.parquet')
-      WHERE n_src = (SELECT count(*)
-                     FROM read_parquet('{_MM7_PHASH_SCRATCH}/*.parquet'))
+      SELECT media_id, dhash FROM {attested('mm7_phash')}
     )
     SELECT a.media_id AS media_a, b.media_id AS media_b,
            CAST(bit_count(xor(a.dhash, b.dhash)) AS INT) AS hamming
@@ -168,7 +157,7 @@ def mm7_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     media_b, hamming), one row per unordered near-dup pair.
 
     ORACLE-BACKED like the d9 audit: Spark materializes the hashes to
-    fingerprinted scratch and derives its pairs FROM the materialized
+    count-stamped scratch and derives its pairs FROM the materialized
     bytes via the banded join; DuckDB re-derives the pair set from the
     same bytes with an independent quadratic self-join
     (bit_count(xor)) — a banding bug (wrong band split, lost bucket,
@@ -194,13 +183,8 @@ def mm7_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin: the decode+hash frame feeds both the count stamp and the
     # scratch rows (without it the mapInPandas decode runs twice)
     hashes = pin(phash_features(media).select("media_id", "dhash"))
-    stamp = hashes.agg(F.count("*").cast("long").alias("n_src"))
-    hashes.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_MM7_PHASH_SCRATCH)
     fps = pin(
-        read_stamped_scratch(spark, _MM7_PHASH_SCRATCH)
-        .select(
+        attest(spark, "mm7_phash", hashes).select(
             F.col("media_id").alias("doc_id"),
             F.col("dhash").alias("simhash"),
         )
@@ -221,10 +205,7 @@ def mm7_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mm8_image_dedup_clusters",
     oracle=f"""
     WITH RECURSIVE h AS (
-      SELECT media_id, dhash
-      FROM read_parquet('{_MM7_PHASH_SCRATCH}/*.parquet')
-      WHERE n_src = (SELECT count(*)
-                     FROM read_parquet('{_MM7_PHASH_SCRATCH}/*.parquet'))
+      SELECT media_id, dhash FROM {attested('mm7_phash')}
     ), pairs AS (
       SELECT a.media_id AS ma, b.media_id AS mb
       FROM h a JOIN h b ON a.media_id < b.media_id
@@ -256,7 +237,7 @@ def mm8_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (media_id, cluster_id, is_keeper).
 
     ORACLE-BACKED end to end: both engines start from the SAME
-    materialized hash bytes (mm7's fingerprinted scratch) and re-derive
+    materialized hash bytes (mm7's stamped scratch) and re-derive
     pairs -> components -> keeper through different math — Spark via
     the banded-hamming join + label propagation, DuckDB via a quadratic
     bit_count self-join + recursive CTE — so a banding loss, a
@@ -271,7 +252,9 @@ def mm8_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("media_a").alias("doc_a"), F.col("media_b").alias("doc_b")
     )
     labels, _ = connected_components(spark, pairs)
-    all_media = read_stamped_scratch(spark, _MM7_PHASH_SCRATCH).select("media_id")
+    all_media = read_stamped_scratch(spark, run_scratch("mm7_phash")).select(
+        "media_id"
+    )
     cluster = F.coalesce(F.col("lab"), F.col("media_id"))
     return (
         all_media.join(
@@ -316,21 +299,14 @@ def _media_split_sql(col: str) -> str:
 
 def _mm11_oracle() -> str:
     from a3_fp_bigdata_spark.multimodal.audio_fp import (
-        _MM9_AFP_SCRATCH,
         AUDIO_NEARDUP_MAX_HAMMING,
     )
 
     return f"""
     WITH ih AS (
-      SELECT media_id, dhash
-      FROM read_parquet('{_MM7_PHASH_SCRATCH}/*.parquet')
-      WHERE n_src = (SELECT count(*)
-                     FROM read_parquet('{_MM7_PHASH_SCRATCH}/*.parquet'))
+      SELECT media_id, dhash FROM {attested('mm7_phash')}
     ), ah AS (
-      SELECT media_id, afp
-      FROM read_parquet('{_MM9_AFP_SCRATCH}/*.parquet')
-      WHERE n_src = (SELECT count(*)
-                     FROM read_parquet('{_MM9_AFP_SCRATCH}/*.parquet'))
+      SELECT media_id, afp FROM {attested('mm9_afp')}
     ), allpairs AS (
       SELECT 'image' AS modality, a.media_id AS ma, b.media_id AS mb,
              CAST(bit_count(xor(a.dhash, b.dhash)) AS INT) AS hamming
@@ -355,7 +331,7 @@ def _mm11_oracle() -> str:
     """
 
 
-@query("mm11_media_split_leakage", oracle=None)  # attached below
+@query("mm11_media_split_leakage", oracle=_mm11_oracle)
 def mm11_media_split_leakage(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -406,18 +382,3 @@ def mm11_media_split_leakage(
         .alias("val_media"),
         "hamming",
     )
-
-
-def _attach_mm11_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["mm11_media_split_leakage"]
-    if rq.oracle is None:
-        _R._REGISTRY["mm11_media_split_leakage"] = dataclasses.replace(
-            rq, oracle=_mm11_oracle()
-        )
-
-
-_attach_mm11_oracle()

@@ -16,8 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import (
-    fingerprint_where,
-    run_scratch,
+    attest,
+    attested,
     table_fingerprint,
     table,
 )
@@ -262,18 +262,6 @@ def a11_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: a19's scratch: the audit oracle must read Spark's sketch estimates
-#: from a path the static SQL can name (per-process run_scratch, same protocol as
-#: dedup's d4 containment audit, including the stale-scratch guard:
-#: rows carry the (``n_src``, ``src_ck``) fingerprint of events at
-#: write time and the oracle filters on both against its live events
-#: view, so scratch from a different sf — or a regenerated corpus at
-#: the same cardinality — red-flags as a row/hash mismatch).
-import os as _os
-
-_A19_SCRATCH = run_scratch("a19_approx_audit")
-
-
 @query(
     "a19_approx_distinct_audit",
     oracle=f"""
@@ -282,8 +270,7 @@ _A19_SCRATCH = run_scratch("a19_approx_audit")
       FROM events GROUP BY event_type
     ), approx AS (
       SELECT event_type, approx_users
-      FROM read_parquet('{_A19_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('events', 'event_id')}
+      FROM {attested('a19_approx_audit', 'events', 'event_id')}
     )
     SELECT e.event_type,
            CAST(e.exact_users AS BIGINT) AS exact_users,
@@ -313,9 +300,7 @@ def a19_approx_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fp = table_fingerprint(spark, sf_dir, "events", "event_id", table_fn=table)
-    approx = approx.crossJoin(F.broadcast(fp))
-    approx.repartition(1).write.mode("overwrite").parquet(_A19_SCRATCH)
-    back = spark.read.parquet(_A19_SCRATCH).drop("n_src", "src_ck")
+    back = attest(spark, "a19_approx_audit", approx, fp)
     exact = (
         table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -332,7 +317,6 @@ def a19_approx_distinct_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_A20_SCRATCH = run_scratch("a20_quantile_audit")
 _A20_QS = (0.25, 0.5, 0.9)
 _A20_ACCURACY = 10000
 
@@ -344,8 +328,7 @@ _A20_ACCURACY = 10000
       SELECT event_type, value FROM events WHERE value IS NOT NULL
     ), ap AS (
       SELECT event_type, q, approx_val
-      FROM read_parquet('{_A20_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('events', 'event_id')}
+      FROM {attested('a20_quantile_audit', 'events', 'event_id')}
     ), rk AS (
       SELECT a.event_type, a.q,
              count(*) AS n_vals,
@@ -401,10 +384,7 @@ def a20_quantile_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fp = table_fingerprint(spark, sf_dir, "events", "event_id", table_fn=table)
-    ap.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_A20_SCRATCH)
-    back = spark.read.parquet(_A20_SCRATCH).drop("n_src", "src_ck")
+    back = attest(spark, "a20_quantile_audit", ap, fp)
     vals = ev.filter(F.col("value").isNotNull()).select(
         "event_type", "value"
     )
@@ -678,10 +658,61 @@ HH_K = 8
 HH_SHARDS = 32
 
 
-@query(
-    "a21_heavy_hitters_audit",
-    oracle=None,  # attached below (needs text_analysis' token CTE)
-)
+def _a21_oracle() -> str:
+    """Renders text_analysis' shared token snippet."""
+    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
+
+    return f"""
+    WITH toks AS (
+      SELECT doc_id % {HH_SHARDS} AS shard, unnest({_SQL_TOKS}) AS tok
+      FROM documents
+    ), shard_counts AS (
+      SELECT shard, tok, CAST(count(*) AS BIGINT) AS c
+      FROM toks GROUP BY shard, tok
+    ), ranked AS (
+      SELECT shard, tok, c,
+             row_number() OVER (PARTITION BY shard
+                                ORDER BY c DESC, tok) AS rn
+      FROM shard_counts
+    ), d1 AS (
+      SELECT shard,
+             COALESCE(max(CASE WHEN rn = {HH_K + 1} THEN c END), 0)
+               AS dec1
+      FROM ranked GROUP BY shard
+    ), summaries AS (
+      SELECT r.tok, r.c - d.dec1 AS est
+      FROM ranked r JOIN d1 d USING (shard)
+      WHERE r.rn <= {HH_K} AND r.c - d.dec1 > 0
+    ), merged AS (
+      SELECT tok, CAST(sum(est) AS BIGINT) AS s
+      FROM summaries GROUP BY tok
+    ), mranked AS (
+      SELECT tok, s, row_number() OVER (ORDER BY s DESC, tok) AS rn
+      FROM merged
+    ), d2 AS (
+      SELECT COALESCE(max(CASE WHEN rn = {HH_K + 1} THEN s END), 0)
+        AS dec2
+      FROM mranked
+    ), final AS (
+      SELECT tok, s - (SELECT dec2 FROM d2) AS est
+      FROM mranked
+      WHERE rn <= {HH_K} AND s - (SELECT dec2 FROM d2) > 0
+    ), exact AS (
+      SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
+      FROM toks GROUP BY tok
+    ), total AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_tokens FROM toks
+    )
+    SELECT f.tok, CAST(f.est AS BIGINT) AS est, e.exact_cnt,
+           t.n_tokens,
+           CAST(f.est <= e.exact_cnt
+                AND (e.exact_cnt - f.est) * {HH_K + 1} <= 2 * t.n_tokens
+                AS BOOLEAN) AS within_bound
+    FROM final f JOIN exact e USING (tok) CROSS JOIN total t
+    """
+
+
+@query("a21_heavy_hitters_audit", oracle=_a21_oracle)
 def a21_heavy_hitters_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -770,72 +801,6 @@ def a21_heavy_hitters_audit(
             )
         ).alias("within_bound"),
     )
-
-
-def _attach_a21_oracle() -> None:
-    """a21's oracle renders text_analysis' shared token snippet; the
-    deferred attach keeps module import order irrelevant (the same
-    pattern as packing's pk7/pk9 oracles)."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
-
-    name = "a21_heavy_hitters_audit"
-    sql = f"""
-    WITH toks AS (
-      SELECT doc_id % {HH_SHARDS} AS shard, unnest({_SQL_TOKS}) AS tok
-      FROM documents
-    ), shard_counts AS (
-      SELECT shard, tok, CAST(count(*) AS BIGINT) AS c
-      FROM toks GROUP BY shard, tok
-    ), ranked AS (
-      SELECT shard, tok, c,
-             row_number() OVER (PARTITION BY shard
-                                ORDER BY c DESC, tok) AS rn
-      FROM shard_counts
-    ), d1 AS (
-      SELECT shard,
-             COALESCE(max(CASE WHEN rn = {HH_K + 1} THEN c END), 0)
-               AS dec1
-      FROM ranked GROUP BY shard
-    ), summaries AS (
-      SELECT r.tok, r.c - d.dec1 AS est
-      FROM ranked r JOIN d1 d USING (shard)
-      WHERE r.rn <= {HH_K} AND r.c - d.dec1 > 0
-    ), merged AS (
-      SELECT tok, CAST(sum(est) AS BIGINT) AS s
-      FROM summaries GROUP BY tok
-    ), mranked AS (
-      SELECT tok, s, row_number() OVER (ORDER BY s DESC, tok) AS rn
-      FROM merged
-    ), d2 AS (
-      SELECT COALESCE(max(CASE WHEN rn = {HH_K + 1} THEN s END), 0)
-        AS dec2
-      FROM mranked
-    ), final AS (
-      SELECT tok, s - (SELECT dec2 FROM d2) AS est
-      FROM mranked
-      WHERE rn <= {HH_K} AND s - (SELECT dec2 FROM d2) > 0
-    ), exact AS (
-      SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
-      FROM toks GROUP BY tok
-    ), total AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_tokens FROM toks
-    )
-    SELECT f.tok, CAST(f.est AS BIGINT) AS est, e.exact_cnt,
-           t.n_tokens,
-           CAST(f.est <= e.exact_cnt
-                AND (e.exact_cnt - f.est) * {HH_K + 1} <= 2 * t.n_tokens
-                AS BOOLEAN) AS within_bound
-    FROM final f JOIN exact e USING (tok) CROSS JOIN total t
-    """
-    rq = _R._REGISTRY[name]
-    if rq.oracle is None:
-        _R._REGISTRY[name] = dataclasses.replace(rq, oracle=sql)
-
-
-_attach_a21_oracle()
 
 
 # ---------------------------------------------------------------------------

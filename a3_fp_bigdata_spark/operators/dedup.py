@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import (
-    fingerprint_where,
-    run_scratch,
+    attest,
+    attested,
     table_fingerprint,
     table,
 )
@@ -302,18 +302,6 @@ def minhash_raw_buckets(ex: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
 
-#: d4's band-signature scratch (r15 — d5's exact recipe one rung up
-#: the ladder): the (doc_id, band, sig) rows are the ONLY
-#: engine-specific step (32 seeded xxhash64 minhashes + per-band
-#: xxhash64 fold); they materialize to fingerprinted scratch, and BOTH
-#: engines independently replay everything downstream — super-bucket
-#: cap, bucket collisions, candidate pairs, and the exact-Jaccard
-#: verification join (DuckDB against its OWN shingle derivation, the
-#: same CTEs d3's oracle uses). The SELECTION is value-attested;
-#: only xxhash64 itself stays pytest-attested via the d3 containment
-#: contract (d4 ⊆ d3, equal jaccard) and the d4_containment_audit row.
-_D4_SIG_SCRATCH = run_scratch("d4_band_sigs")
-
 #: shingle-derivation CTEs shared with d3's oracle, minus its
 #: quadratic all-pairs join: d4's oracle verifies CANDIDATES only —
 #: the same work profile as the Spark side.
@@ -332,8 +320,7 @@ def _d4_oracle() -> str:
     return f"""
     WITH {_D4_VERIFY_CTES}, raw AS (
       SELECT doc_id, band, sig
-      FROM read_parquet('{_D4_SIG_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('documents', 'doc_id')}
+      FROM {attested('d4_band_sigs', 'documents', 'doc_id')}
     ), capped AS (
       SELECT doc_id, band, sig FROM raw
       QUALIFY count(*) OVER (PARTITION BY band, sig)
@@ -370,11 +357,14 @@ def d4_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ORACLE-BACKED since r15 (was the longest-standing rows-only
     flagship): the raw band-signature rows — the only seed-internal
-    step — materialize to stamped scratch (see _D4_SIG_SCRATCH), and
-    both engines independently replay cap -> collisions -> candidate
-    pairs -> exact-Jaccard verification; DuckDB's verification uses
-    its OWN shingle sets, so a pair the LSH proposes only survives
-    both sides if ground truth agrees on its jaccard. Audit-scale
+    step (32 seeded xxhash64 minhashes + per-band xxhash64 fold) —
+    materialize to attested scratch, and both engines independently
+    replay cap -> collisions -> candidate pairs -> exact-Jaccard
+    verification; DuckDB's verification uses its OWN shingle sets (the
+    same CTEs d3's oracle uses), so a pair the LSH proposes only
+    survives both sides if ground truth agrees on its jaccard. Only
+    xxhash64 itself stays pytest-attested via the d3 containment
+    contract (d4 ⊆ d3, equal jaccard). Audit-scale
     note: the scratch is 16 rows per doc — far smaller than d5's
     per-token scratch; the production path writes the same bucket
     table per corpus snapshot anyway (staged_raw_buckets), so
@@ -394,10 +384,7 @@ def d4_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (session, sf_dir) and SHARED with d11's nightly probe — computing
     # the 32-hash agg once per corpus snapshot is the production shape.
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    staged_raw_buckets(spark, sf_dir).crossJoin(
-        F.broadcast(fp)
-    ).repartition(1).write.mode("overwrite").parquet(_D4_SIG_SCRATCH)
-    back = spark.read.parquet(_D4_SIG_SCRATCH).drop("n_src", "src_ck")
+    back = attest(spark, "d4_band_sigs", staged_raw_buckets(spark, sf_dir), fp)
     # Candidate pairs WITHOUT a bucket self-join: collect each bucket's
     # doc list and explode its pairs in place.
     # Super-bucket guard: a bucket of s docs emits s^2 candidate pairs,
@@ -497,24 +484,6 @@ def _verify_candidate_pairs(
     )
 
 
-#: Scratch location for the d4 containment audit: the oracle SQL is a
-#: static string, so the Spark side must land the LSH pairs at a path
-#: DuckDB can name — which rules out sf-scoping (the oracle cannot
-#: know sf_dir). PER-PROCESS (run_scratch: uid+pid in the path, both
-#: sides of one run see the same path because the oracle f-string is
-#: built in the same interpreter) so concurrent harnesses — pytest
-#: next to a parity sweep — physically cannot clobber each other;
-#: overwritten per invocation within a process. Stale-scratch
-#: guard: every scratch row carries the (``n_src``, ``src_ck``)
-#: source fingerprint (count + key checksum, data.src_fingerprint)
-#: stamped at write time, and the oracle FILTERS on BOTH matching ITS
-#: live documents view — scratch from a different sf (10× counts) or
-#: a regenerated same-cardinality corpus (checksum differs) yields an
-#: empty/zero oracle side and a red mismatch. Scope: catches stale or
-#: foreign scratch; it is a fingerprint, not a cryptographic hash.
-_D4_AUDIT_SCRATCH = run_scratch("d4_containment_pairs")
-
-
 @query(
     "d4_containment_audit",
     oracle=f"""
@@ -522,8 +491,7 @@ _D4_AUDIT_SCRATCH = run_scratch("d4_containment_pairs")
       {_D3_SELECT}
     ), lsh AS (
       SELECT doc_a, doc_b
-      FROM read_parquet('{_D4_AUDIT_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('documents', 'doc_id')}
+      FROM {attested('d4_containment_pairs', 'documents', 'doc_id')}
     )
     SELECT CAST((SELECT count(*) FROM lsh) AS BIGINT) AS n_lsh_pairs,
            CAST((SELECT count(*)
@@ -550,13 +518,8 @@ def d4_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny write + two counting joins on top of the shared staged
     shingle/bucket tables."""
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    pairs = (
-        d4_minhash_lsh(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .crossJoin(F.broadcast(fp))
-    )
-    pairs.repartition(1).write.mode("overwrite").parquet(_D4_AUDIT_SCRATCH)
-    back = spark.read.parquet(_D4_AUDIT_SCRATCH).drop("n_src", "src_ck")
+    pairs = d4_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
+    back = attest(spark, "d4_containment_pairs", pairs, fp)
     exact = d3_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     outside = back.join(exact, ["doc_a", "doc_b"], "left_anti")
     return back.agg(
@@ -614,16 +577,6 @@ def simhash_frame(
     return _simhash_from_token_hashes(_token_hash_frame(spark, sf_dir), nbits)
 
 
-#: d5's token-hash scratch (r13, the d9 pattern one rung earlier): the
-#: per-occurrence token hashes — the ONLY engine-specific step —
-#: materialize to fingerprinted scratch; Spark aggregates the
-#: fingerprints from the read-back while DuckDB independently replays
-#: the exact-integer vote/majority/bit-pack derivation in SQL. A vote
-#: bug, a wrong shift, or a packing slip is a red hash mismatch on
-#: this row directly; only xxhash64 itself stays attested by the d3
-#: (exact-Jaccard) pytest contract instead.
-_D5_TOK_SCRATCH = run_scratch("d5_tok_hashes")
-
 _D5_NBITS = 32
 
 
@@ -638,8 +591,7 @@ def _d5_oracle() -> str:
     return f"""
     WITH th AS (
       SELECT doc_id, h
-      FROM read_parquet('{_D5_TOK_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('documents', 'doc_id')}
+      FROM {attested('d5_tok_hashes', 'documents', 'doc_id')}
     ), votes AS (
       SELECT doc_id, {votes}
       FROM th GROUP BY doc_id
@@ -658,6 +610,9 @@ def d5_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive the fingerprints from the same hashes (exact int64 votes,
     majority signs, bit packing — DuckDB's ``>>`` is arithmetic like
     Spark's shiftright, so bit extraction agrees on negative hashes).
+    A vote bug, a wrong shift, or a packing slip is a red hash mismatch
+    on this row directly; only xxhash64 itself stays attested by the d3
+    (exact-Jaccard) pytest contract.
     Audit-scale note: the scratch is per-occurrence (corpus token
     count) — proportionate for attestation tiers; the production path
     is the fused simhash_frame aggregate with no materialization."""
@@ -666,10 +621,7 @@ def d5_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no pin: th feeds exactly one write; the aggregation reads the
     # scratch back, not th (d9 pins its READ-BACK because it feeds
     # both self-join sides — different shape)
-    th.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D5_TOK_SCRATCH)
-    back = spark.read.parquet(_D5_TOK_SCRATCH).drop("n_src", "src_ck")
+    back = attest(spark, "d5_tok_hashes", th, fp)
     return _simhash_from_token_hashes(back, _D5_NBITS)
 
 
@@ -896,21 +848,12 @@ def _uncapped_bands(
     )
 
 
-#: d9's own fingerprint scratch (r12): the pair QUERY itself now runs
-#: the audit-tier protocol — materialized fingerprints, oracle
-#: re-derives the full pair LIST quadratically — so the driver/parity
-#: row is value-verified, not rows-only (the pigeonhole audit keeps
-#: attesting the set-difference contract on top).
-_D9_FP_SCRATCH = run_scratch("d9_fps")
-
-
 @query(
     "d9_simhash_pairs",
     oracle=f"""
     WITH fps AS (
       SELECT doc_id, simhash
-      FROM read_parquet('{_D9_FP_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('documents', 'doc_id')}
+      FROM {attested('d9_fps', 'documents', 'doc_id')}
     ), bands AS (
       SELECT doc_id, b.i AS band_idx,
              (simhash >> (b.i * 8)) & 255 AS band_val
@@ -967,14 +910,9 @@ def d9_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = simhash_frame(spark, sf_dir, SIMHASH_PAIR_BITS).select(
         "doc_id", "simhash"
     )
-    sh.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D9_FP_SCRATCH)
     # the read-back feeds BOTH self-join sides: pin it, or the scan
     # runs twice (dedup.py's measured multi-reference rule)
-    fps = pin(
-        spark.read.parquet(_D9_FP_SCRATCH).drop("n_src", "src_ck")
-    )
+    fps = pin(attest(spark, "d9_fps", sh, fp))
     return _pairs_from_simhash(fps)
 
 
@@ -1093,26 +1031,15 @@ def _blocked_hamming_pairs(fps: DataFrame, max_hamming: int) -> DataFrame:
     )
 
 
-#: d9 audit scratch — same static-oracle protocol as the d4/a19/sim11
-#: audits (per-process run_scratch paths the SQL string can name; every row
-#: carries the (``n_src``, ``src_ck``) fingerprint of documents the
-#: oracle filters on, so stale scratch — different sf or regenerated
-#: same-cardinality corpus — red-flags instead of validating).
-_D9_AUDIT_FP_SCRATCH = run_scratch("d9_audit_fps")
-_D9_AUDIT_PAIRS_SCRATCH = run_scratch("d9_audit_pairs")
-
-
 @query(
     "d9_pigeonhole_audit",
     oracle=f"""
     WITH fps AS (
       SELECT doc_id, simhash
-      FROM read_parquet('{_D9_AUDIT_FP_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('documents', 'doc_id')}
+      FROM {attested('d9_audit_fps', 'documents', 'doc_id')}
     ), prs AS (
       SELECT doc_a, doc_b, hamming
-      FROM read_parquet('{_D9_AUDIT_PAIRS_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('documents', 'doc_id')}
+      FROM {attested('d9_audit_pairs', 'documents', 'doc_id')}
     ), bands AS (
       SELECT doc_id, b.i AS band_idx,
              (simhash >> (b.i * 8)) & 255 AS band_val
@@ -1171,26 +1098,12 @@ def d9_pigeonhole_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = simhash_frame(spark, sf_dir, SIMHASH_PAIR_BITS).select(
         "doc_id", "simhash"
     )
-    sh.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_D9_AUDIT_FP_SCRATCH)
     # the pairs under audit derive from the MATERIALIZED fingerprints
     # (same shared derivation d9 runs; simhash_frame is deterministic,
     # so these are exactly d9's pairs — without paying the 48-column
     # token-vote aggregation a second time)
-    fps = pin(
-        spark.read.parquet(_D9_AUDIT_FP_SCRATCH).drop(
-            "n_src", "src_ck"
-        )
-    )
-    _pairs_from_simhash(fps).crossJoin(
-        F.broadcast(fp)
-    ).repartition(1).write.mode("overwrite").parquet(
-        _D9_AUDIT_PAIRS_SCRATCH
-    )
-    prs = spark.read.parquet(_D9_AUDIT_PAIRS_SCRATCH).drop(
-        "n_src", "src_ck"
-    )
+    fps = pin(attest(spark, "d9_audit_fps", sh, fp))
+    prs = attest(spark, "d9_audit_pairs", _pairs_from_simhash(fps), fp)
 
     # Spark's own re-derivation: ALL-PAIRS hamming, restricted to
     # pairs sharing >= 1 uncapped band (semi-join against the banded
@@ -1401,11 +1314,6 @@ def d11_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _verify_candidate_pairs(ex, candidates, JACCARD_THRESHOLD)
 
 
-#: d11 audit scratch — the d4/a19/sim11/d9 protocol (per-process run_scratch path,
-#: (``n_src``, ``src_ck``) stale-scratch fingerprint guard).
-_D11_AUDIT_SCRATCH = run_scratch("d11_incr_pairs")
-
-
 def _d11_audit_oracle() -> str:
     from a3_fp_bigdata_spark.operators.text_analysis import (
         sample_predicate_sql,
@@ -1418,8 +1326,7 @@ def _d11_audit_oracle() -> str:
       {_D3_SELECT}
     ), lsh AS (
       SELECT doc_a, doc_b, jaccard
-      FROM read_parquet('{_D11_AUDIT_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('documents', 'doc_id')}
+      FROM {attested('d11_incr_pairs', 'documents', 'doc_id')}
     )
     SELECT
       CAST((SELECT count(*) FROM lsh) AS BIGINT) AS n_pairs,
@@ -1457,12 +1364,8 @@ def d11_containment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    d11_incremental_lsh(spark, sf_dir).crossJoin(
-        F.broadcast(fp)
-    ).repartition(1).write.mode("overwrite").parquet(_D11_AUDIT_SCRATCH)
-    back = pin(
-        spark.read.parquet(_D11_AUDIT_SCRATCH).drop("n_src", "src_ck")
-    )
+    pairs = d11_incremental_lsh(spark, sf_dir)
+    back = pin(attest(spark, "d11_incr_pairs", pairs, fp))
     exact = pin(
         d3_ngram_jaccard(spark, sf_dir).withColumnRenamed(
             "jaccard", "jaccard_exact"
@@ -1723,10 +1626,38 @@ def d13_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "source")
 
 
-@query(
-    "d14_quality_keeper",
-    oracle=None,  # assembled below: needs text_analysis's quality CTEs
-)
+def _d14_oracle() -> str:
+    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_QUALITY_CTES
+
+    return f"""
+    WITH RECURSIVE {_D3_CTES}, pairs AS (
+      {_D3_SELECT}
+    ), edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION ALL
+      SELECT doc_b AS src, doc_a AS dst FROM pairs
+    ), reach(doc, lab) AS (
+      SELECT src, src FROM edges
+      UNION
+      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc = e.dst
+    ), clusters AS (
+      SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
+    ), {_SQL_QUALITY_CTES}, ranked AS (
+      SELECT c.doc,
+             row_number() OVER (PARTITION BY c.cluster_id
+                                ORDER BY {half_up_sql('q.quality')} DESC, c.doc)
+               AS rn
+      FROM clusters c JOIN quality q ON q.doc_id = c.doc
+    ), dropped AS (
+      SELECT doc FROM ranked WHERE rn > 1
+    )
+    SELECT d.doc_id, d.lang, d.source, {half_up_sql('q.quality')} AS quality
+    FROM documents d JOIN quality q ON q.doc_id = d.doc_id
+    WHERE d.doc_id NOT IN (SELECT doc FROM dropped)
+    """
+
+
+@query("d14_quality_keeper", oracle=_d14_oracle)
 def d14_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d13's keeper policy upgraded from 'smallest id' to 'highest
     quality': within each near-dup cluster (d12) keep the member with
@@ -1776,54 +1707,6 @@ def d14_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", "source", F.col("q").alias("quality"))
     )
 
-
-def _d14_oracle() -> str:
-    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_QUALITY_CTES
-
-    return f"""
-    WITH RECURSIVE {_D3_CTES}, pairs AS (
-      {_D3_SELECT}
-    ), edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), reach(doc, lab) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc = e.dst
-    ), clusters AS (
-      SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
-    ), {_SQL_QUALITY_CTES}, ranked AS (
-      SELECT c.doc,
-             row_number() OVER (PARTITION BY c.cluster_id
-                                ORDER BY {half_up_sql('q.quality')} DESC, c.doc)
-               AS rn
-      FROM clusters c JOIN quality q ON q.doc_id = c.doc
-    ), dropped AS (
-      SELECT doc FROM ranked WHERE rn > 1
-    )
-    SELECT d.doc_id, d.lang, d.source, {half_up_sql('q.quality')} AS quality
-    FROM documents d JOIN quality q ON q.doc_id = d.doc_id
-    WHERE d.doc_id NOT IN (SELECT doc FROM dropped)
-    """
-
-
-# Attach the oracle post-hoc: it needs text_analysis._SQL_QUALITY_CTES,
-# and importing that at module top would be fine today but couples the
-# modules' import order; doing it after registration keeps both lazy.
-def _attach_d14_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["d14_quality_keeper"]
-    if rq.oracle is None:
-        _R._REGISTRY["d14_quality_keeper"] = dataclasses.replace(
-            rq, oracle=_d14_oracle()
-        )
-
-
-_attach_d14_oracle()
 
 
 #: d15 window length in TOKENS. Any duplicated run of >= DUPSPAN_K

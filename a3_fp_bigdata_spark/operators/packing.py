@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import (
+    attest,
+    attested,
     read_stamped_scratch,
     run_scratch,
     table_fingerprint,
@@ -616,7 +618,26 @@ def sliding_chunk_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-@query("pk9_weighted_sample", oracle=None)  # attached below (quality CTEs)
+def _pk9_oracle() -> str:
+    from a3_fp_bigdata_spark.operators.text_analysis import (
+        _SQL_QUALITY_CTES,
+    )
+
+    return f"""
+    WITH {_SQL_QUALITY_CTES}, rated AS (
+      SELECT doc_id,
+             greatest(1, CAST(floor({half_up_sql('quality')} * 100 + 0.5)
+                              AS INT)) AS keep_rate
+      FROM quality
+    )
+    SELECT doc_id, keep_rate,
+           {half_up_sql('100.0 / keep_rate')} AS inv_weight
+    FROM rated
+    WHERE ((doc_id % {SAMPLE_PREMOD}) * {SAMPLE_MULT}) % 100 < keep_rate
+    """
+
+
+@query("pk9_weighted_sample", oracle=_pk9_oracle)
 def pk9_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-weighted importance sampling: keep each document with
     probability proportional to its tx2 quality score (keep_rate =
@@ -659,25 +680,6 @@ def pk9_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "keep_rate",
         half_up(F.lit(100.0) / F.col("keep_rate")).alias("inv_weight"),
     )
-
-
-def _pk9_oracle() -> str:
-    from a3_fp_bigdata_spark.operators.text_analysis import (
-        _SQL_QUALITY_CTES,
-    )
-
-    return f"""
-    WITH {_SQL_QUALITY_CTES}, rated AS (
-      SELECT doc_id,
-             greatest(1, CAST(floor({half_up_sql('quality')} * 100 + 0.5)
-                              AS INT)) AS keep_rate
-      FROM quality
-    )
-    SELECT doc_id, keep_rate,
-           {half_up_sql('100.0 / keep_rate')} AS inv_weight
-    FROM rated
-    WHERE ((doc_id % {SAMPLE_PREMOD}) * {SAMPLE_MULT}) % 100 < keep_rate
-    """
 
 
 #: pl2's portable chunk featurization: dim d counts the chunk tokens
@@ -735,7 +737,7 @@ def _pl2_oracle() -> str:
     """
 
 
-@query("pl2_chunk_index_stats", oracle=None)  # attached below (pk8 CTEs)
+@query("pl2_chunk_index_stats", oracle=_pl2_oracle)
 def pl2_chunk_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAG ingest pipeline composed end-to-end: pk8's sliding chunks ->
     per-chunk feature vector (bag-of-prefix counts — the portable
@@ -826,7 +828,7 @@ def _pk7_oracle() -> str:
     """
 
 
-@query("pk7_split_leakage", oracle=None)  # oracle attached below (d3 CTEs)
+@query("pk7_split_leakage", oracle=_pk7_oracle)
 def pk7_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-split contamination audit: near-duplicate document pairs
     (d3's exact n-gram Jaccard ground truth) that land on OPPOSITE
@@ -866,10 +868,62 @@ def pk7_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 MANIFEST_MIN_QUALITY = 0.5
 
 
-@query(
-    "pl1_training_manifest",
-    oracle=None,  # assembled below from dedup + text_analysis CTEs
-)
+def _pl1_oracle() -> str:
+    from a3_fp_bigdata_spark.operators.dedup import _D3_CTES, _D3_SELECT
+    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_QUALITY_CTES
+
+    return f"""
+    WITH RECURSIVE {_D3_CTES}, pairs AS (
+      {_D3_SELECT}
+    ), edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM pairs
+      UNION ALL
+      SELECT doc_b AS src, doc_a AS dst FROM pairs
+    ), reach(doc, lab) AS (
+      SELECT src, src FROM edges
+      UNION
+      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc = e.dst
+    ), clusters AS (
+      SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
+    ), {_SQL_QUALITY_CTES}, ranked AS (
+      SELECT c.doc,
+             row_number() OVER (PARTITION BY c.cluster_id
+                                -- division-free: ordering by the
+                                -- floor numerator equals ordering by
+                                -- half_up (positive constant divisor)
+                                ORDER BY floor(q.quality * 10000 + 0.5)
+                                         DESC, c.doc)
+               AS rn
+      FROM clusters c JOIN quality q ON q.doc_id = c.doc
+    ), dropped AS (
+      SELECT doc FROM ranked WHERE rn > 1
+    ), kept AS (
+      SELECT d.doc_id, d.doc_id % {NSHARDS} AS shard,
+             CAST({_SQL_COST} AS BIGINT) AS cost,
+             row_number() OVER (PARTITION BY d.doc_id % {NSHARDS}
+                                ORDER BY d.doc_id) AS rn
+      FROM documents d JOIN quality q ON q.doc_id = d.doc_id
+      WHERE {half_up_sql('q.quality')} >= {MANIFEST_MIN_QUALITY}
+        AND d.doc_id NOT IN (SELECT doc FROM dropped)
+    ), step AS (
+      SELECT shard, rn, doc_id, cost,
+             CAST(0 AS BIGINT) AS seq_id, cost AS fill
+      FROM kept WHERE rn = 1
+      UNION ALL
+      SELECT k.shard, k.rn, k.doc_id, k.cost,
+             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
+                  THEN s.seq_id + 1 ELSE s.seq_id END,
+             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
+                  THEN k.cost ELSE s.fill + k.cost END
+      FROM step s JOIN kept k ON k.shard = s.shard AND k.rn = s.rn + 1
+    )
+    SELECT CAST(shard AS BIGINT) AS shard, seq_id,
+           count(*) AS n_docs, CAST(sum(cost) AS BIGINT) AS seq_tokens
+    FROM step GROUP BY shard, seq_id
+    """
+
+
+@query("pl1_training_manifest", oracle=_pl1_oracle)
 def pl1_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WHOLE curation pipeline as one declarative query — the
     engine's end-to-end flagship for training-data assembly:
@@ -948,61 +1002,6 @@ def pl1_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_docs"),
         F.sum("cost").cast("bigint").alias("seq_tokens"),
     )
-
-
-def _pl1_oracle() -> str:
-    from a3_fp_bigdata_spark.operators.dedup import _D3_CTES, _D3_SELECT
-    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_QUALITY_CTES
-
-    return f"""
-    WITH RECURSIVE {_D3_CTES}, pairs AS (
-      {_D3_SELECT}
-    ), edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b AS src, doc_a AS dst FROM pairs
-    ), reach(doc, lab) AS (
-      SELECT src, src FROM edges
-      UNION
-      SELECT e.src, r.lab FROM edges e JOIN reach r ON r.doc = e.dst
-    ), clusters AS (
-      SELECT doc, min(lab) AS cluster_id FROM reach GROUP BY doc
-    ), {_SQL_QUALITY_CTES}, ranked AS (
-      SELECT c.doc,
-             row_number() OVER (PARTITION BY c.cluster_id
-                                -- division-free: ordering by the
-                                -- floor numerator equals ordering by
-                                -- half_up (positive constant divisor)
-                                ORDER BY floor(q.quality * 10000 + 0.5)
-                                         DESC, c.doc)
-               AS rn
-      FROM clusters c JOIN quality q ON q.doc_id = c.doc
-    ), dropped AS (
-      SELECT doc FROM ranked WHERE rn > 1
-    ), kept AS (
-      SELECT d.doc_id, d.doc_id % {NSHARDS} AS shard,
-             CAST({_SQL_COST} AS BIGINT) AS cost,
-             row_number() OVER (PARTITION BY d.doc_id % {NSHARDS}
-                                ORDER BY d.doc_id) AS rn
-      FROM documents d JOIN quality q ON q.doc_id = d.doc_id
-      WHERE {half_up_sql('q.quality')} >= {MANIFEST_MIN_QUALITY}
-        AND d.doc_id NOT IN (SELECT doc FROM dropped)
-    ), step AS (
-      SELECT shard, rn, doc_id, cost,
-             CAST(0 AS BIGINT) AS seq_id, cost AS fill
-      FROM kept WHERE rn = 1
-      UNION ALL
-      SELECT k.shard, k.rn, k.doc_id, k.cost,
-             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
-                  THEN s.seq_id + 1 ELSE s.seq_id END,
-             CASE WHEN s.fill + k.cost > {PACK_BUDGET}
-                  THEN k.cost ELSE s.fill + k.cost END
-      FROM step s JOIN kept k ON k.shard = s.shard AND k.rn = s.rn + 1
-    )
-    SELECT CAST(shard AS BIGINT) AS shard, seq_id,
-           count(*) AS n_docs, CAST(sum(cost) AS BIGINT) AS seq_tokens
-    FROM step GROUP BY shard, seq_id
-    """
 
 
 @query(
@@ -1151,10 +1150,11 @@ def pl3_corpus_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "pl4_span_clean_manifest",
-    oracle=None,  # assembled below: composes dedup + text_analysis CTEs
-)
+def _pl4_oracle() -> str:
+    return _manifest_oracle(decontaminate=False)
+
+
+@query("pl4_span_clean_manifest", oracle=_pl4_oracle)
 def pl4_span_clean_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SPAN-level curation pipeline end-to-end — pl1's doc-level
     chain upgraded with substring dedup, the composition a real
@@ -1272,10 +1272,6 @@ def _pack_manifest(kept: DataFrame) -> DataFrame:
         F.count("*").alias("n_docs"),
         F.sum("cost").cast("bigint").alias("seq_tokens"),
     )
-
-
-def _pl4_oracle() -> str:
-    return _manifest_oracle(decontaminate=False)
 
 
 def _manifest_oracle(decontaminate: bool) -> str:
@@ -1397,10 +1393,11 @@ def _manifest_oracle(decontaminate: bool) -> str:
     """
 
 
-@query(
-    "pl5_decontaminated_manifest",
-    oracle=None,  # assembled below: pl4's chain + the decon fragment
-)
+def _pl5_oracle() -> str:
+    return _manifest_oracle(decontaminate=True)
+
+
+@query("pl5_decontaminated_manifest", oracle=_pl5_oracle)
 def pl5_decontaminated_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation pipeline a production pretraining run actually
     ships, end to end: pl4's span-level chain (tx2 quality floor ->
@@ -1437,34 +1434,6 @@ def pl5_decontaminated_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ~sample_predicate(F.col("doc_id"), DECON_BENCH_PCT)
     ).join(flagged, "doc_id", "left_anti")
     return _pack_manifest(clean)
-
-
-def _pl5_oracle() -> str:
-    return _manifest_oracle(decontaminate=True)
-
-
-def _attach_deferred_oracles() -> None:
-    """Oracles composed from other modules' CTE fragments are attached
-    post-registration (the fragments import cleanly only after the
-    whole operator package is loadable)."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    for name, build in (
-        ("pl1_training_manifest", _pl1_oracle),
-        ("pl4_span_clean_manifest", _pl4_oracle),
-        ("pl5_decontaminated_manifest", _pl5_oracle),
-        ("pk7_split_leakage", _pk7_oracle),
-        ("pk9_weighted_sample", _pk9_oracle),
-        ("pl2_chunk_index_stats", _pl2_oracle),
-    ):
-        rq = _R._REGISTRY[name]
-        if rq.oracle is None:
-            _R._REGISTRY[name] = dataclasses.replace(rq, oracle=build())
-
-
-_attach_deferred_oracles()
 
 
 #: pk11 length-bucketed batching: docs per training batch, and the
@@ -1582,10 +1551,14 @@ _FORGET_SQL = (
 )
 
 
-@query(
-    "pl6_forget_ledger",
-    oracle=None,  # assembled below: needs dedup's recursive-CTE clusters
-)
+def _pl6_oracle() -> str:
+    return f"""
+    {_forget_ctes()}
+    SELECT doc_id, reason, cluster_id FROM ledger
+    """
+
+
+@query("pl6_forget_ledger", oracle=_pl6_oracle)
 def pl6_forget_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten purge ledger WITH near-dup cluster
     expansion — the deletion artifact a GDPR/CCPA-compliant corpus
@@ -1637,10 +1610,20 @@ def pl6_forget_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     return requested.unionByName(expansion)
 
 
-@query(
-    "pl7_forget_attestation",
-    oracle=None,  # assembled below: pl3's digest over the purged corpus
-)
+def _pl7_oracle() -> str:
+    return f"""
+    {_forget_ctes()}
+    SELECT CAST(count(*) AS BIGINT) AS n_rows,
+           CAST(COALESCE(bit_xor({_ck_sql(_CK_COLS, 's1')}), 0)
+                AS BIGINT) AS xor1,
+           CAST(COALESCE(bit_xor({_ck_sql(_CK_COLS, 's2')}), 0)
+                AS BIGINT) AS xor2
+    FROM documents
+    WHERE doc_id NOT IN (SELECT doc_id FROM ledger)
+    """
+
+
+@query("pl7_forget_attestation", oracle=_pl7_oracle)
 def pl7_forget_attestation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-purge attestation: pl3's order-invariant corpus checksum
     recomputed over the corpus MINUS pl6's purge set — (n_rows, xor1,
@@ -1705,43 +1688,6 @@ def _forget_ctes() -> str:
         f"WITH RECURSIVE {_D3_CTES}, pairs AS (\n      {_D3_SELECT}\n"
         f"    ), {_FORGET_CLUSTER_CTES.format(forget=_FORGET_SQL)}"
     )
-
-
-def _pl6_oracle() -> str:
-    return f"""
-    {_forget_ctes()}
-    SELECT doc_id, reason, cluster_id FROM ledger
-    """
-
-
-def _pl7_oracle() -> str:
-    return f"""
-    {_forget_ctes()}
-    SELECT CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(COALESCE(bit_xor({_ck_sql(_CK_COLS, 's1')}), 0)
-                AS BIGINT) AS xor1,
-           CAST(COALESCE(bit_xor({_ck_sql(_CK_COLS, 's2')}), 0)
-                AS BIGINT) AS xor2
-    FROM documents
-    WHERE doc_id NOT IN (SELECT doc_id FROM ledger)
-    """
-
-
-def _attach_forget_oracles() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    for name, build in (
-        ("pl6_forget_ledger", _pl6_oracle),
-        ("pl7_forget_attestation", _pl7_oracle),
-    ):
-        rq = _R._REGISTRY[name]
-        if rq.oracle is None:
-            _R._REGISTRY[name] = dataclasses.replace(rq, oracle=build())
-
-
-_attach_forget_oracles()
 
 
 # ---------------------------------------------------------------------------
@@ -1854,7 +1800,7 @@ def _quality_bands(spark: SparkSession, sf_dir: str):
     return scored, banded
 
 
-@query("pk12_quality_mixture", oracle=None)  # attached below (tx13 CTEs)
+@query("pk12_quality_mixture", oracle=_pk12_oracle)
 def pk12_quality_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-stratified mixture — pk5's data-derived downsampling
     keyed on LM-quality BANDS instead of language: CCNet buckets the
@@ -1913,28 +1859,12 @@ def pk12_quality_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _attach_pk12_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["pk12_quality_mixture"]
-    if rq.oracle is None:
-        _R._REGISTRY["pk12_quality_mixture"] = dataclasses.replace(
-            rq, oracle=_pk12_oracle()
-        )
-
-
-_attach_pk12_oracle()
-
-
 # ---------------------------------------------------------------------------
 # pl8: corpus-release flagship — the full production chain in one artifact
 # ---------------------------------------------------------------------------
 
 
 def _pl8_oracle() -> str:
-    from a3_fp_bigdata_spark.data import fingerprint_where
     from a3_fp_bigdata_spark.operators.dedup import (
         _D3_CTES,
         _D3_SELECT,
@@ -1943,7 +1873,6 @@ def _pl8_oracle() -> str:
         D18_NGRAM,
     )
     from a3_fp_bigdata_spark.operators.similarity import (
-        _D17_SCRATCH,
         _SQL_D,
         _sql_cos,
         SEMDEDUP_EPS,
@@ -2019,8 +1948,7 @@ def _pl8_oracle() -> str:
       FROM embeddings
     ), d17mat AS (
       SELECT vec_id, cell
-      FROM read_parquet('{_D17_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('embeddings', 'vec_id')}
+      FROM {attested('d17_semdedup', 'embeddings', 'vec_id')}
     ), d17drop AS (
       SELECT DISTINCT b.vec_id
       FROM d17mat a JOIN d17mat b ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -2109,7 +2037,7 @@ def _pl8_oracle() -> str:
     """
 
 
-@query("pl8_release_manifest", oracle=None)  # attached below (composed CTEs)
+@query("pl8_release_manifest", oracle=_pl8_oracle)
 def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE corpus-release artifact — the full production sequence a
     real pretraining run ships, composed end to end and attested in
@@ -2252,21 +2180,6 @@ def pl8_release_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _attach_pl8_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["pl8_release_manifest"]
-    if rq.oracle is None:
-        _R._REGISTRY["pl8_release_manifest"] = dataclasses.replace(
-            rq, oracle=_pl8_oracle()
-        )
-
-
-_attach_pl8_oracle()
-
-
 # ---------------------------------------------------------------------------
 # pk13: quality-curriculum schedule (global order without a global sort)
 # ---------------------------------------------------------------------------
@@ -2335,7 +2248,7 @@ def _pk13_oracle() -> str:
     """
 
 
-@query("pk13_curriculum_schedule", oracle=None)  # attached below
+@query("pk13_curriculum_schedule", oracle=_pk13_oracle)
 def pk13_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-curriculum training order — consume pk11's length-
     bucketed batches band by band (cleanest LM-quality tercile first,
@@ -2395,21 +2308,6 @@ def pk13_curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("offset") + F.col("within") - 1).alias("curriculum_pos"),
         )
     )
-
-
-def _attach_pk13_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["pk13_curriculum_schedule"]
-    if rq.oracle is None:
-        _R._REGISTRY["pk13_curriculum_schedule"] = dataclasses.replace(
-            rq, oracle=_pk13_oracle()
-        )
-
-
-_attach_pk13_oracle()
 
 
 #: pk15 — temperature (alpha) smoothing exponent, expressed as the
@@ -2510,11 +2408,6 @@ def pk15_temperature_mixture(
 # pk16: best-fit-decreasing packing + its 2-approximation certificate
 # ---------------------------------------------------------------------------
 
-#: pk16 audit scratch — the ml5/mm11 protocol (per-process run_scratch
-#: path, (n_src, src_ck) staleness fingerprint).
-_PK16_SCRATCH = run_scratch("pk16_bfd")
-
-
 def _bfd_assign(pdf):
     """Best-fit-decreasing over one shard: place docs in cost-desc
     order (doc_id tie-break) into the FULLEST bin that still fits;
@@ -2542,10 +2435,48 @@ def _bfd_assign(pdf):
     return pdf[["doc_id", "shard", "bin_id", "cost"]]
 
 
-@query(
-    "pk16_bestfit_pack_audit",
-    oracle=None,  # attached below (needs the cost SQL + fingerprint)
-)
+def _pk16_oracle() -> str:
+    return f"""
+    WITH scratch AS (
+      SELECT doc_id, shard, bin_id, cost
+      FROM {attested('pk16_bfd', 'documents', 'doc_id')}
+    ), costs AS (
+      SELECT doc_id, CAST({_SQL_COST} AS BIGINT) AS want_cost
+      FROM documents
+    ), bins AS (
+      SELECT s.shard, s.bin_id,
+             CAST(sum(s.cost) AS BIGINT) AS fill,
+             CAST(count(*) AS BIGINT) AS n_docs_bin,
+             CAST(sum(CASE WHEN s.cost <> c.want_cost THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_cost_mismatch
+      FROM scratch s JOIN costs c USING (doc_id)
+      GROUP BY 1, 2
+    )
+    SELECT shard,
+           CAST(sum(n_docs_bin) AS BIGINT) AS n_docs,
+           CAST(count(*) AS BIGINT) AS n_bins,
+           CAST(sum(CASE WHEN fill > {PACK_BUDGET} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_oversize,
+           CAST(COALESCE(max(CASE WHEN fill <= {PACK_BUDGET}
+                                  THEN fill END), 0)
+                AS BIGINT) AS max_regular_fill,
+           CAST(sum(CASE WHEN 2 * fill <= {PACK_BUDGET} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_light_bins,
+           CAST(min(CASE WHEN fill > {PACK_BUDGET}
+                         THEN CAST(n_docs_bin = 1 AS INT)
+                         ELSE 1 END) AS INT) AS oversize_singletons_ok,
+           CAST(COALESCE(max(CASE WHEN fill <= {PACK_BUDGET}
+                                  THEN fill END), 0) <= {PACK_BUDGET}
+                AS INT) AS budget_ok,
+           CAST(sum(CASE WHEN 2 * fill <= {PACK_BUDGET} THEN 1 ELSE 0 END)
+                <= 1 AS INT) AS cert_ok
+    FROM bins
+    WHERE (SELECT sum(n_cost_mismatch) FROM bins) = 0
+    GROUP BY shard
+    """
+
+
+@query("pk16_bestfit_pack_audit", oracle=_pk16_oracle)
 def pk16_bestfit_pack_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2574,10 +2505,10 @@ def pk16_bestfit_pack_audit(
         )
     )
     fp = table_fingerprint(spark, sf_dir, "documents", "doc_id", table_fn=table)
-    assignment.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_PK16_SCRATCH)
-    back = read_stamped_scratch(spark, _PK16_SCRATCH).drop("src_ck")
+    attest(spark, "pk16_bfd", assignment, fp)
+    # one row per document, so the fingerprint's n_src also IS the
+    # scratch's row count: re-read through the row-count guard too
+    back = read_stamped_scratch(spark, run_scratch("pk16_bfd")).drop("src_ck")
     bins = back.groupBy("shard", "bin_id").agg(
         F.sum("cost").cast("long").alias("fill"),
         F.count("*").cast("long").alias("n_docs_bin"),
@@ -2616,58 +2547,3 @@ def pk16_bestfit_pack_audit(
             (F.col("n_light_bins") <= 1).cast("int").alias("cert_ok"),
         )
     )
-
-
-def _attach_pk16_oracle() -> None:
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.data import fingerprint_where
-
-    sql = f"""
-    WITH scratch AS (
-      SELECT doc_id, shard, bin_id, cost
-      FROM read_parquet('{_PK16_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('documents', 'doc_id')}
-    ), costs AS (
-      SELECT doc_id, CAST({_SQL_COST} AS BIGINT) AS want_cost
-      FROM documents
-    ), bins AS (
-      SELECT s.shard, s.bin_id,
-             CAST(sum(s.cost) AS BIGINT) AS fill,
-             CAST(count(*) AS BIGINT) AS n_docs_bin,
-             CAST(sum(CASE WHEN s.cost <> c.want_cost THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_cost_mismatch
-      FROM scratch s JOIN costs c USING (doc_id)
-      GROUP BY 1, 2
-    )
-    SELECT shard,
-           CAST(sum(n_docs_bin) AS BIGINT) AS n_docs,
-           CAST(count(*) AS BIGINT) AS n_bins,
-           CAST(sum(CASE WHEN fill > {PACK_BUDGET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_oversize,
-           CAST(COALESCE(max(CASE WHEN fill <= {PACK_BUDGET}
-                                  THEN fill END), 0)
-                AS BIGINT) AS max_regular_fill,
-           CAST(sum(CASE WHEN 2 * fill <= {PACK_BUDGET} THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_light_bins,
-           CAST(min(CASE WHEN fill > {PACK_BUDGET}
-                         THEN CAST(n_docs_bin = 1 AS INT)
-                         ELSE 1 END) AS INT) AS oversize_singletons_ok,
-           CAST(COALESCE(max(CASE WHEN fill <= {PACK_BUDGET}
-                                  THEN fill END), 0) <= {PACK_BUDGET}
-                AS INT) AS budget_ok,
-           CAST(sum(CASE WHEN 2 * fill <= {PACK_BUDGET} THEN 1 ELSE 0 END)
-                <= 1 AS INT) AS cert_ok
-    FROM bins
-    WHERE (SELECT sum(n_cost_mismatch) FROM bins) = 0
-    GROUP BY shard
-    """
-    rq = _R._REGISTRY["pk16_bestfit_pack_audit"]
-    if rq.oracle is None:
-        _R._REGISTRY["pk16_bestfit_pack_audit"] = dataclasses.replace(
-            rq, oracle=sql
-        )
-
-
-_attach_pk16_oracle()

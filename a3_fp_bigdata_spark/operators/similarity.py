@@ -26,8 +26,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from a3_fp_bigdata_spark.data import (
-    fingerprint_where,
-    run_scratch,
+    attest,
+    attested,
     table_fingerprint,
     table,
 )
@@ -184,9 +184,10 @@ def _buckets(emb: DataFrame, planes: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "sim2_lsh_ann",
-    oracle=f"""
+def _sim2_oracle() -> str:
+    """Shared by sim10: the incremental index must answer exactly like
+    the one-shot full-corpus derivation."""
+    return f"""
     {_SQL_BUCKETED_CTE}, q AS (
       SELECT b.bucket AS qbucket, v.e AS qe
       FROM bucketed b JOIN vecs v USING (vec_id) WHERE b.vec_id = 0
@@ -198,8 +199,10 @@ def _buckets(emb: DataFrame, planes: DataFrame) -> DataFrame:
     WHERE b.bucket = q.qbucket AND b.vec_id <> 0
     ORDER BY {half_up_sql(_sql_cos('v.e', 'q.qe'))} DESC, b.vec_id
     LIMIT {ANN_TOPK}
-    """,
-)
+    """
+
+
+@query("sim2_lsh_ann", oracle=_sim2_oracle)
 def sim2_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via random-hyperplane LSH: bucket every vector by the sign
     pattern of {N_PLANES} hyperplane dots, then rank only the query's
@@ -409,17 +412,6 @@ IVF_CELLS = 16
 IVF_NPROBE = 4
 IVF_SEED = 7
 
-#: sim3's cell-assignment scratch (r14 flip to oracle-backed — the
-#: d5/ml2 recipe): the seeded KMeans cells and the probe flags are the
-#: ONLY engine-specific steps; they materialize to fingerprinted
-#: scratch and BOTH engines independently re-derive the final answer
-#: (filter probed candidates, exact cosine against the vec_id=0 query,
-#: total-ordered top-k) — a probe-selection bug, a wrong cosine, or a
-#: tie-break slip is a red hash mismatch on the row itself. Only the
-#: KMeans fit stays seed-internal; its recall is separately attested
-#: by sim11_ivf_recall_audit against DuckDB's own ground truth.
-_SIM3_SCRATCH = run_scratch("sim3_ivf_cells")
-
 def _sim3_assignments(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[int]]:
@@ -470,9 +462,9 @@ def _sim3_oracle() -> str:
     ), q AS (
       SELECT e AS qe FROM vecs WHERE vec_id = 0
     ), cand AS (
-      SELECT vec_id FROM read_parquet('{_SIM3_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('embeddings', 'vec_id')}
-        AND probed AND vec_id <> 0
+      SELECT vec_id
+      FROM {attested('sim3_ivf_cells', 'embeddings', 'vec_id')}
+      WHERE probed AND vec_id <> 0
     )
     SELECT v.vec_id, {half_up_sql(_sql_cos('v.e', 'q.qe'))} AS cosine
     FROM cand c JOIN vecs v USING (vec_id) CROSS JOIN q
@@ -495,10 +487,13 @@ def sim3_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
        only driver-side data, O(k*dim)).
 
     ORACLE-BACKED since r14 (was rows-only "cells are seed-specific"):
-    the assignment + probe flags materialize to stamped scratch and
-    the oracle replays the exact selection and ranking from them (see
-    _SIM3_SCRATCH note); pytest additionally pins recall against
-    sim1's exact top-k. Audit-scale note: the scratch is one row per
+    the assignment + probe flags (the ONLY engine-specific steps)
+    materialize to attested scratch and the oracle replays the exact
+    selection and ranking from them — a probe-selection bug, a wrong
+    cosine, or a tie-break slip is a red hash mismatch on the row
+    itself. Only the KMeans fit stays seed-internal; its recall is
+    attested by sim11_ivf_recall_audit, and pytest additionally pins
+    recall against sim1's exact top-k. Audit-scale note: the scratch is one row per
     vector — the production path keeps the assignment as the vector
     table's partition key with no extra materialization."""
     assigned, probe_cells = _sim3_assignments(spark, sf_dir)
@@ -508,10 +503,7 @@ def sim3_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cell",
         F.col("cell").isin(probe_cells).alias("probed"),
     )
-    scr.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_SIM3_SCRATCH)
-    back = spark.read.parquet(_SIM3_SCRATCH).drop("n_src", "src_ck")
+    back = attest(spark, "sim3_ivf_cells", scr, fp)
 
     q = table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") == 0
@@ -665,11 +657,6 @@ def d6_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: d6 audit scratch — the d4/a19/sim11/d9/d11 protocol (per-process run_scratch
-#: path, (``n_src``, ``src_ck``) stale-scratch fingerprint guard).
-_D6_AUDIT_SCRATCH = run_scratch("d6_gemm_cands")
-
-
 @query(
     "d6_gemm_audit",
     oracle=f"""
@@ -681,8 +668,7 @@ _D6_AUDIT_SCRATCH = run_scratch("d6_gemm_cands")
       WHERE {_sql_cos('a.e', 'b.e')} >= {NEARDUP_COSINE}
     ), cand AS (
       SELECT vec_a, vec_b
-      FROM read_parquet('{_D6_AUDIT_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('embeddings', 'vec_id')}
+      FROM {attested('d6_gemm_cands', 'embeddings', 'vec_id')}
     )
     SELECT
       CAST((SELECT count(*) FROM cand) AS BIGINT) AS n_candidates,
@@ -726,15 +712,10 @@ def d6_gemm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tasks, each one BLAS matmul)."""
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    _d6_gemm_candidates(emb).crossJoin(F.broadcast(fp)).repartition(
-        1
-    ).write.mode("overwrite").parquet(_D6_AUDIT_SCRATCH)
     # pin: cand feeds five aggregates and exact feeds two (the d9/d11
     # audits' measured multi-reference rule — without it each count
     # re-scans the scratch parquet / re-runs the quadratic join)
-    cand = pin(
-        spark.read.parquet(_D6_AUDIT_SCRATCH).drop("n_src", "src_ck")
-    )
+    cand = pin(attest(spark, "d6_gemm_cands", _d6_gemm_candidates(emb), fp))
 
     # independent exact set: ALL pairs via the JVM fold expression — a
     # broadcast-nested-loop join on vec_a < vec_b (quadratic: the
@@ -1125,7 +1106,7 @@ def append_to_bucketed_index(
     )
 
 
-@query("sim10_incremental_index", oracle=None)  # sim2's SQL, attached below
+@query("sim10_incremental_index", oracle=_sim2_oracle)
 def sim10_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN index maintenance — the nightly-arrivals shape:
     the index is built WITHOUT tonight's batch (every
@@ -1160,31 +1141,6 @@ def sim10_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_bucketed_ann(spark, _SIM4_INDEX[key], sf_dir=sf_dir)
 
 
-def _attach_sim10_oracle() -> None:
-    """sim10 shares sim2's oracle verbatim — the incremental index must
-    answer exactly like the one-shot full-corpus derivation."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    rq = _R._REGISTRY["sim10_incremental_index"]
-    sim2 = _R._REGISTRY.get("sim2_lsh_ann")
-    if rq.oracle is None and sim2 is not None and sim2.oracle:
-        _R._REGISTRY["sim10_incremental_index"] = dataclasses.replace(
-            rq, oracle=sim2.oracle
-        )
-
-
-_attach_sim10_oracle()
-
-
-#: sim11's scratch — same static-oracle protocol as the d4/a19 audits
-#: (per-process run_scratch path the SQL string can name), including the
-#: stale-scratch guard: rows carry the (``n_src``, ``src_ck``)
-#: fingerprint of embeddings at write time and the oracle filters on
-#: both against its live view, so scratch from a different sf — or a
-#: regenerated same-cardinality corpus — red-flags, never validates.
-_SIM11_SCRATCH = run_scratch("sim11_ivf_hits")
 
 
 @query(
@@ -1202,8 +1158,8 @@ _SIM11_SCRATCH = run_scratch("sim11_ivf_hits")
       ORDER BY {half_up_sql(_sql_cos('v.e', 'q.qe'))} DESC, v.vec_id
       LIMIT {ANN_TOPK}
     ), ivf AS (
-      SELECT vec_id FROM read_parquet('{_SIM11_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('embeddings', 'vec_id')}
+      SELECT vec_id
+      FROM {attested('sim11_ivf_hits', 'embeddings', 'vec_id')}
     )
     SELECT CAST({ANN_TOPK} AS BIGINT) AS k,
            CAST((SELECT count(*) FROM exact SEMI JOIN ivf USING (vec_id))
@@ -1218,16 +1174,11 @@ def sim11_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-{ANN_TOPK} INDEPENDENTLY and semi-joins the same materialized
     ids — so the recall number is verified against ground truth the
     IVF probe never touched (the sim8 pattern for sim2, extended to
-    the seed-specific path via the d4-audit scratch protocol).
+    the seed-specific path via the audit-scratch protocol).
     tests/test_similarity.py separately pins recall >= 0.8."""
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    hits = (
-        sim3_ivf_ann(spark, sf_dir)
-        .select("vec_id")
-        .crossJoin(F.broadcast(fp))
-    )
-    hits.repartition(1).write.mode("overwrite").parquet(_SIM11_SCRATCH)
-    back = spark.read.parquet(_SIM11_SCRATCH).drop("n_src", "src_ck")
+    hits = sim3_ivf_ann(spark, sf_dir).select("vec_id")
+    back = attest(spark, "sim11_ivf_hits", hits, fp)
     exact = sim1_cosine_topk(spark, sf_dir).limit(ANN_TOPK).select("vec_id")
     n_hit = exact.join(back, "vec_id", "left_semi").agg(
         F.count("*").cast("long").alias("n_hit")
@@ -1372,16 +1323,6 @@ def _pq_encoded(spark: SparkSession, sf_dir: str, cb) -> DataFrame:
     )
 
 
-#: sim12's shortlist scratch (r14 flip to oracle-backed — the sim3
-#: recipe one stage later): the codebooks, codes, and ADC scores are
-#: the engine/seed-specific half; the SHORTLIST they select
-#: materializes to fingerprinted scratch and both engines replay the
-#: exact-rerank stage independently (exact cosine over the shortlist,
-#: total-ordered top-k). Quantization internals stay attested by
-#: sim12_pq_recall_audit's independent ground truth.
-_SIM12_SL_SCRATCH = run_scratch("sim12_shortlist")
-
-
 def _sim12_oracle() -> str:
     return f"""
     WITH vecs AS (
@@ -1390,8 +1331,8 @@ def _sim12_oracle() -> str:
     ), q AS (
       SELECT e AS qe FROM vecs WHERE vec_id = 0
     ), cand AS (
-      SELECT vec_id FROM read_parquet('{_SIM12_SL_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('embeddings', 'vec_id')}
+      SELECT vec_id
+      FROM {attested('sim12_shortlist', 'embeddings', 'vec_id')}
     )
     SELECT v.vec_id, {half_up_sql(_sql_cos('v.e', 'q.qe'))} AS cosine
     FROM cand c JOIN vecs v USING (vec_id) CROSS JOIN q
@@ -1419,9 +1360,11 @@ def sim12_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
        top-{ANN_TOPK}.
 
     ORACLE-BACKED since r14 (was rows-only "codebooks are seed/impl-
-    specific"): the shortlist materializes to stamped scratch and the
-    oracle replays the exact rerank from it (see _SIM12_SL_SCRATCH
-    note); sim12_pq_recall_audit separately attests recall against an
+    specific"): the codebooks, codes and ADC scores are the engine/
+    seed-specific half; the SHORTLIST they select materializes to
+    attested scratch and both engines replay the exact rerank from it
+    (exact cosine over the shortlist, total-ordered top-k);
+    sim12_pq_recall_audit separately attests recall against an
     independent DuckDB ground truth, and pytest pins recall vs sim1.
     Scale: training on a sample, encoding one narrow distributed pass,
     the ADC scan reads a ~30x smaller index, and the rerank touches k'
@@ -1465,10 +1408,7 @@ def sim12_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below (and the oracle) read it back, so the attested selection
     # is exactly the bytes the quantizer produced
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    shortlist.crossJoin(F.broadcast(fp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_SIM12_SL_SCRATCH)
-    back = spark.read.parquet(_SIM12_SL_SCRATCH).drop("n_src", "src_ck")
+    back = attest(spark, "sim12_shortlist", shortlist, fp)
     qrow = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q_emb")
     )
@@ -1480,11 +1420,6 @@ def sim12_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(ANN_TOPK)
     )
-
-
-#: sim12's scratch — the d4/a19/sim11/d6 static-oracle protocol
-#: (per-process run_scratch path, (n_src, src_ck) stale-scratch fingerprint guard).
-_SIM12_SCRATCH = run_scratch("sim12_pq_hits")
 
 
 @query(
@@ -1502,8 +1437,8 @@ _SIM12_SCRATCH = run_scratch("sim12_pq_hits")
       ORDER BY {half_up_sql(_sql_cos('v.e', 'q.qe'))} DESC, v.vec_id
       LIMIT {ANN_TOPK}
     ), pq AS (
-      SELECT vec_id FROM read_parquet('{_SIM12_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('embeddings', 'vec_id')}
+      SELECT vec_id
+      FROM {attested('sim12_pq_hits', 'embeddings', 'vec_id')}
     )
     SELECT CAST({ANN_TOPK} AS BIGINT) AS k,
            CAST((SELECT count(*) FROM exact SEMI JOIN pq USING (vec_id))
@@ -1522,11 +1457,8 @@ def sim12_pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly; any quantization loss shows up identically on both
     engines. tests/test_similarity.py separately pins recall >= 0.8."""
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    hits = (
-        sim12_pq_ann(spark, sf_dir).select("vec_id").crossJoin(F.broadcast(fp))
-    )
-    hits.repartition(1).write.mode("overwrite").parquet(_SIM12_SCRATCH)
-    back = spark.read.parquet(_SIM12_SCRATCH).drop("n_src", "src_ck")
+    hits = sim12_pq_ann(spark, sf_dir).select("vec_id")
+    back = attest(spark, "sim12_pq_hits", hits, fp)
     exact = sim1_cosine_topk(spark, sf_dir).limit(ANN_TOPK).select("vec_id")
     n_hit = exact.join(back, "vec_id", "left_semi").agg(
         F.count("*").cast("long").alias("n_hit")
@@ -1608,17 +1540,6 @@ def _fit_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sharded.localCheckpoint()
 
 
-#: d17's cell-assignment scratch (r14 flip to oracle-backed): the
-#: seeded k-means cells (the only engine-specific step) materialize to
-#: fingerprinted scratch, and BOTH engines independently re-derive the
-#: keep rule from them — Spark joins raw embeddings back by vec_id and
-#: runs the within-cell pair filter; DuckDB replays the identical
-#: quadratic min-id-keeper CTE its audit already proved (the d5
-#: pattern: internals attested by materialization, the DECISION
-#: replayed end-to-end).
-_D17_CELLS_SCRATCH = run_scratch("d17_cells")
-
-
 def _d17_oracle() -> str:
     return f"""
     WITH vecs AS (
@@ -1626,8 +1547,7 @@ def _d17_oracle() -> str:
       FROM embeddings
     ), mat AS (
       SELECT vec_id, cell
-      FROM read_parquet('{_D17_CELLS_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('embeddings', 'vec_id')}
+      FROM {attested('d17_cells', 'embeddings', 'vec_id')}
     ), prior AS (
       SELECT DISTINCT b.vec_id
       FROM mat a JOIN mat b ON a.cell = b.cell AND a.vec_id < b.vec_id
@@ -1667,21 +1587,19 @@ def d17_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster together by definition.
 
     ORACLE-BACKED since r14 (was rows-only "cells are seed-specific"):
-    the assignments materialize to stamped scratch and the oracle
-    replays the min-id keep rule from them in full (see
-    _D17_CELLS_SCRATCH note); d17_semdedup_audit remains the separate
-    attestation over the published verdict. Audit-scale note: the
+    the seeded k-means cells (the only engine-specific step)
+    materialize to attested scratch; Spark joins raw embeddings back
+    by vec_id and runs the within-cell pair filter, while DuckDB
+    replays the quadratic min-id-keeper CTE its audit already proved;
+    d17_semdedup_audit remains the separate attestation over the
+    published verdict. Audit-scale note: the
     scratch is one row per vector — the production path keeps the
     assignment as the IVF index's own materialized artifact."""
     # already localCheckpoint-backed by the stage memo — no pin needed
     assigned = _semdedup_cells(spark, sf_dir)
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    assigned.select("vec_id", "cell").crossJoin(
-        F.broadcast(fp)
-    ).repartition(1).write.mode("overwrite").parquet(_D17_CELLS_SCRATCH)
     back = pin(
-        spark.read.parquet(_D17_CELLS_SCRATCH)
-        .drop("n_src", "src_ck")
+        attest(spark, "d17_cells", assigned.select("vec_id", "cell"), fp)
         .join(
             table(spark, sf_dir, "embeddings").select(
                 "vec_id", "embedding"
@@ -1712,10 +1630,6 @@ def d17_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: d17's scratch — the d4/a19/sim11/d6/sim12 static-oracle protocol.
-_D17_SCRATCH = run_scratch("d17_semdedup")
-
-
 def materialize_d17_verdict(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1724,12 +1638,9 @@ def materialize_d17_verdict(
     Shared by the d17 audit and pl8's release chain — both of whose
     oracles take the CELLS as given from the scratch bytes and
     re-derive the keep rule independently."""
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     fp = table_fingerprint(spark, sf_dir, "embeddings", "vec_id", table_fn=table)
-    d17_semantic_dedup(spark, sf_dir).crossJoin(F.broadcast(fp)).repartition(
-        1
-    ).write.mode("overwrite").parquet(_D17_SCRATCH)
-    return pin(spark.read.parquet(_D17_SCRATCH).drop("n_src", "src_ck"))
+    verdict = d17_semantic_dedup(spark, sf_dir)
+    return pin(attest(spark, "d17_semdedup", verdict, fp))
 
 
 @query(
@@ -1740,8 +1651,7 @@ def materialize_d17_verdict(
       FROM embeddings
     ), mat AS (
       SELECT vec_id, cell, is_kept
-      FROM read_parquet('{_D17_SCRATCH}/*.parquet')
-      WHERE {fingerprint_where('embeddings', 'vec_id')}
+      FROM {attested('d17_semdedup', 'embeddings', 'vec_id')}
     ), prior AS (
       SELECT DISTINCT b.vec_id
       FROM mat a JOIN mat b ON a.cell = b.cell AND a.vec_id < b.vec_id

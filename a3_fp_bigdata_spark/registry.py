@@ -10,6 +10,12 @@ Operator modules register named queries with::
 - ``oracle`` is ANSI SQL DuckDB runs over the same parquet tables; omit it
   (``oracle=None``) for non-SQL-expressible ops — the driver then records a
   weaker rows-only check.
+- ``oracle`` may also be a zero-argument builder returning that SQL. The
+  registry calls each builder once, after every query module is imported
+  (``_load_all_modules``), so an oracle may compose other modules' CTE
+  fragments or reuse another query's builder (st14 replays dq4's SQL)
+  without caring about import order. Modules never touch the registry
+  table itself.
 - Column names/aliases MUST match between the two sides (the driver's
   compare sorts columns by name before hashing values).
 
@@ -24,7 +30,7 @@ from __future__ import annotations
 
 from collections import Counter
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import TypeVar
 
 from pyspark import StorageLevel
@@ -156,22 +162,32 @@ class RegisteredQuery:
 
 
 _REGISTRY: dict[str, RegisteredQuery] = {}
+#: name -> oracle builder not yet called; see _load_all_modules().
+_ORACLE_BUILDERS: dict[str, Callable[[], str]] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator registering a named query (and optional DuckDB oracle)."""
+def query(
+    name: str, oracle: str | Callable[[], str] | None = None
+) -> Callable[[QueryFn], QueryFn]:
+    """Decorator registering a named query (and optional DuckDB oracle:
+    SQL, or a zero-argument builder of it)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = RegisteredQuery(name, fn, oracle, fn.__doc__ or "")
+        sql = oracle
+        if callable(oracle):
+            _ORACLE_BUILDERS[name] = oracle
+            sql = None
+        _REGISTRY[name] = RegisteredQuery(name, fn, sql, fn.__doc__ or "")
         return fn
 
     return deco
 
 
 def _load_all_modules() -> None:
-    """Import every module that registers queries (idempotent)."""
+    """Import every module that registers queries (idempotent), then
+    call the oracle builders registered so far."""
     from a3_fp_bigdata_spark.operators import (  # noqa: F401
         aggregates,
         dedup,
@@ -210,6 +226,11 @@ def _load_all_modules() -> None:
         incremental_dedup,
         ingest,
     )
+
+    for name in list(_ORACLE_BUILDERS):
+        sql = _ORACLE_BUILDERS[name]()
+        _REGISTRY[name] = replace(_REGISTRY[name], oracle=sql)
+        del _ORACLE_BUILDERS[name]
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -31,17 +31,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from a3_fp_bigdata_spark.data import table
+from a3_fp_bigdata_spark.data import scratch_dir, table
 from a3_fp_bigdata_spark.operators.packing import (
+    _pl2_oracle,
     chunk_bucket_frame,
     sliding_chunk_frame,
 )
 from a3_fp_bigdata_spark.registry import query
 from a3_fp_bigdata_spark.schemas import TESTDATA
-from a3_fp_bigdata_spark.streaming.incremental_dedup import (
-    STAGE_FILES,
-    _scratch_dir,
-)
+from a3_fp_bigdata_spark.streaming.incremental_dedup import STAGE_FILES
 from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
 from a3_fp_bigdata_spark.streaming.materialized import delta_merge_sink
 
@@ -109,7 +107,7 @@ def chunk_index_sink(
         key="bucket",
         delta_fn=bucket_delta_frame,
         combine_fn=combine,
-        checkpoint_dir=checkpoint_dir or _scratch_dir("a3_chunkidx_cp_"),
+        checkpoint_dir=checkpoint_dir or scratch_dir("a3_chunkidx_cp_"),
     )
 
 
@@ -161,7 +159,7 @@ def chunk_membership_sink(
         key=_PAIR_COL,
         delta_fn=membership_delta_frame,
         combine_fn=combine,
-        checkpoint_dir=checkpoint_dir or _scratch_dir("a3_chunkmem_cp_"),
+        checkpoint_dir=checkpoint_dir or scratch_dir("a3_chunkmem_cp_"),
     )
 
 
@@ -179,15 +177,15 @@ def occupancy_from_membership(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-@query("st11_chunk_index_stream", oracle=None)  # attached below (pl2's SQL)
+@query("st11_chunk_index_stream", oracle=_pl2_oracle)
 def st11_chunk_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run: stage documents as {STAGE_FILES} parquet
     files, stream them one file per micro-batch through
     chunk_index_sink, then read the drained occupancy table. The
     oracle is pl2's one-shot SQL over the full corpus — streaming
     accumulation must converge to exactly the batch answer."""
-    stage = _scratch_dir("a3_chunkidx_stage_")
-    out = _scratch_dir("a3_chunkidx_out_")
+    stage = scratch_dir("a3_chunkidx_stage_")
+    out = scratch_dir("a3_chunkidx_out_")
     docs = table(spark, sf_dir, "documents")
     docs.repartition(STAGE_FILES, "doc_id").write.mode("overwrite").parquet(
         stage
@@ -201,22 +199,3 @@ def st11_chunk_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = chunk_index_sink(stream, spark, out)
         q.awaitTermination()
     return spark.read.parquet(out).select("bucket", "n_chunks", "n_docs")
-
-
-def _attach_oracle() -> None:
-    """st11 shares pl2's oracle verbatim — ONE SQL definition of the
-    occupancy table, checked against both the batch and the streaming
-    path."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.operators.packing import _pl2_oracle
-
-    rq = _R._REGISTRY["st11_chunk_index_stream"]
-    if rq.oracle is None:
-        _R._REGISTRY["st11_chunk_index_stream"] = dataclasses.replace(
-            rq, oracle=_pl2_oracle()
-        )
-
-
-_attach_oracle()

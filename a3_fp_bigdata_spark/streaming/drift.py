@@ -25,13 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import table
+from a3_fp_bigdata_spark.data import scratch_dir, table
+from a3_fp_bigdata_spark.operators.quality_checks import _dq4_oracle
 from a3_fp_bigdata_spark.registry import query
 from a3_fp_bigdata_spark.schemas import TESTDATA
-from a3_fp_bigdata_spark.streaming.incremental_dedup import (
-    STAGE_FILES,
-    _scratch_dir,
-)
+from a3_fp_bigdata_spark.streaming.incremental_dedup import STAGE_FILES
 from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
 from a3_fp_bigdata_spark.streaming.materialized import delta_merge_sink
 
@@ -95,14 +93,11 @@ def drift_histogram_sink(
         key="cell",
         delta_fn=lambda batch: cell_histogram_delta(batch, planes),
         combine_fn=combine,
-        checkpoint_dir=checkpoint_dir or _scratch_dir("a3_drift_cp_"),
+        checkpoint_dir=checkpoint_dir or scratch_dir("a3_drift_cp_"),
     )
 
 
-@query(
-    "st14_stream_embedding_drift",
-    oracle=None,  # attached below: dq4's SQL verbatim — full replay
-)
+@query("st14_stream_embedding_drift", oracle=_dq4_oracle)
 def st14_stream_embedding_drift(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -122,8 +117,8 @@ def st14_stream_embedding_drift(
     from a3_fp_bigdata_spark.operators.similarity import _planes
     from a3_fp_bigdata_spark.registry import pin
 
-    stage = _scratch_dir("a3_drift_stage_")
-    out = _scratch_dir("a3_drift_out_")
+    stage = scratch_dir("a3_drift_stage_")
+    out = scratch_dir("a3_drift_out_")
     emb = table(spark, sf_dir, "embeddings")
     emb.repartition(STAGE_FILES, "vec_id").write.mode(
         "overwrite"
@@ -162,21 +157,3 @@ def st14_stream_embedding_drift(
             .alias("drifted"),
         )
     )
-
-
-def _attach_st14_oracle() -> None:
-    """The oracle IS dq4's: the streaming view must converge to the
-    batch histogram, so the batch SQL replays the streaming run."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-
-    dq4 = _R._REGISTRY["dq4_embedding_drift"]
-    rq = _R._REGISTRY["st14_stream_embedding_drift"]
-    if rq.oracle is None and dq4.oracle is not None:
-        _R._REGISTRY["st14_stream_embedding_drift"] = dataclasses.replace(
-            rq, oracle=dq4.oracle
-        )
-
-
-_attach_st14_oracle()

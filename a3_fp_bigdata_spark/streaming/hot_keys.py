@@ -32,15 +32,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from a3_fp_bigdata_spark.data import run_scratch, table
+from a3_fp_bigdata_spark.data import attest, attested, scratch_dir, table
 from a3_fp_bigdata_spark.functions import text as TX
 from a3_fp_bigdata_spark.operators.aggregates import HH_K, HH_SHARDS
 from a3_fp_bigdata_spark.registry import query
 from a3_fp_bigdata_spark.schemas import TESTDATA
-from a3_fp_bigdata_spark.streaming.incremental_dedup import (
-    STAGE_FILES,
-    _scratch_dir,
-)
+from a3_fp_bigdata_spark.streaming.incremental_dedup import STAGE_FILES
 from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
 from a3_fp_bigdata_spark.streaming.materialized import delta_merge_sink
 
@@ -105,17 +102,35 @@ def hot_key_sink(
         key="shard",
         delta_fn=shard_summary_delta,
         combine_fn=combine,
-        checkpoint_dir=checkpoint_dir or _scratch_dir("a3_hotkey_cp_"),
+        checkpoint_dir=checkpoint_dir or scratch_dir("a3_hotkey_cp_"),
     )
 
 
-_ST13_SCRATCH = run_scratch("st13_hot_keys")
+def _st13_oracle() -> str:
+    """Renders text_analysis' token snippet."""
+    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
+
+    return f"""
+    WITH s AS (
+      SELECT tok, est FROM {attested('st13_hot_keys')}
+    ), toks AS (
+      SELECT unnest({_SQL_TOKS}) AS tok FROM documents
+    ), exact AS (
+      SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
+      FROM toks GROUP BY tok
+    ), total AS (
+      SELECT CAST(count(*) AS BIGINT) AS n_tokens FROM toks
+    )
+    SELECT s.tok, CAST(s.est AS BIGINT) AS est, e.exact_cnt,
+           t.n_tokens,
+           CAST(s.est <= e.exact_cnt
+                AND (e.exact_cnt - s.est) * {HH_K + 1} <= 2 * t.n_tokens
+                AS BOOLEAN) AS within_bound
+    FROM s JOIN exact e USING (tok) CROSS JOIN total t
+    """
 
 
-@query(
-    "st13_stream_hot_keys",
-    oracle=None,  # attached below (needs text_analysis' token CTE)
-)
+@query("st13_stream_hot_keys", oracle=_st13_oracle)
 def st13_stream_hot_keys(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -133,8 +148,8 @@ def st13_stream_hot_keys(
     count over the BATCH plus a merge against a <= HH_SHARDS*HH_K-row
     view; the view never grows. The exact-count join here is the
     AUDIT rung only."""
-    stage = _scratch_dir("a3_hotkey_stage_")
-    out = _scratch_dir("a3_hotkey_out_")
+    stage = scratch_dir("a3_hotkey_stage_")
+    out = scratch_dir("a3_hotkey_out_")
     docs = table(spark, sf_dir, "documents")
     docs.repartition(STAGE_FILES, "doc_id").write.mode(
         "overwrite"
@@ -165,11 +180,7 @@ def st13_stream_hot_keys(
         )
         .select("tok", (F.col("s") - F.col("dec2")).alias("est"))
     )
-    stamp = final.agg(F.count("*").cast("long").alias("n_src"))
-    final.crossJoin(F.broadcast(stamp)).repartition(1).write.mode(
-        "overwrite"
-    ).parquet(_ST13_SCRATCH)
-    back = spark.read.parquet(_ST13_SCRATCH).drop("n_src")
+    back = attest(spark, "st13_hot_keys", final)
     toks = docs.select(F.explode(TX.tokens(F.col("text"))).alias("tok"))
     exact = toks.groupBy("tok").agg(
         F.count("*").cast("long").alias("exact_cnt")
@@ -192,40 +203,3 @@ def st13_stream_hot_keys(
             ).alias("within_bound"),
         )
     )
-
-
-def _attach_st13_oracle() -> None:
-    """Deferred like a21's: renders text_analysis' token snippet."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.operators.text_analysis import _SQL_TOKS
-
-    name = "st13_stream_hot_keys"
-    sql = f"""
-    WITH s AS (
-      SELECT tok, est
-      FROM read_parquet('{_ST13_SCRATCH}/*.parquet')
-      WHERE n_src = (SELECT count(*)
-                     FROM read_parquet('{_ST13_SCRATCH}/*.parquet'))
-    ), toks AS (
-      SELECT unnest({_SQL_TOKS}) AS tok FROM documents
-    ), exact AS (
-      SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt
-      FROM toks GROUP BY tok
-    ), total AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_tokens FROM toks
-    )
-    SELECT s.tok, CAST(s.est AS BIGINT) AS est, e.exact_cnt,
-           t.n_tokens,
-           CAST(s.est <= e.exact_cnt
-                AND (e.exact_cnt - s.est) * {HH_K + 1} <= 2 * t.n_tokens
-                AS BOOLEAN) AS within_bound
-    FROM s JOIN exact e USING (tok) CROSS JOIN total t
-    """
-    rq = _R._REGISTRY[name]
-    if rq.oracle is None:
-        _R._REGISTRY[name] = dataclasses.replace(rq, oracle=sql)
-
-
-_attach_st13_oracle()

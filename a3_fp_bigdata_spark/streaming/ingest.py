@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import itertools
 import os
-import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,11 +36,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from a3_fp_bigdata_spark.data import scratch_dir, widen_legacy_long_ts
 from a3_fp_bigdata_spark.data import table as batch_table
-from a3_fp_bigdata_spark.data import widen_legacy_long_ts
 from a3_fp_bigdata_spark.functions.rounding import half_up, half_up_sql
 from a3_fp_bigdata_spark.registry import query
 from a3_fp_bigdata_spark.sources.csv_io import append_csv_batch
+from a3_fp_bigdata_spark.streaming.batch_windows import ST3_SESSIONS_SQL
 
 _qname_counter = itertools.count()
 
@@ -185,7 +185,7 @@ def micro_batch_csv_sink(
 
     trigger_seconds=None runs AvailableNow (deterministic tests);
     production passes 60 for the reference's cadence."""
-    cp = checkpoint_dir or tempfile.mkdtemp(prefix="a3_stream_cp_")
+    cp = checkpoint_dir or scratch_dir("a3_stream_cp_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -393,11 +393,9 @@ def st9_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained parquet back. The view must equal the batch aggregate —
     the invariant the partition-scoped merge preserves batch after
     batch."""
-    import tempfile
-
     from a3_fp_bigdata_spark.streaming import materialized as MV
 
-    out = tempfile.mkdtemp(prefix="a3_mv_q_") + "/view"
+    out = scratch_dir("a3_mv_q_") + "/view"
     with streaming_shuffle(spark, 8):
         q = MV.materialized_view_sink(
             MV.event_type_counts_stream(stream_events(spark, sf_dir)),
@@ -409,7 +407,7 @@ def st9_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MV.read_view(spark, out)
 
 
-@query("st12_stream_session_window", oracle=None)  # st3's SQL, attached below
+@query("st12_stream_session_window", oracle=ST3_SESSIONS_SQL)
 def st12_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming session windows: file source -> native
     session_window aggregation (30-min gap, the streaming-capable
@@ -437,26 +435,3 @@ def st12_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return run_available_now(sess, output_mode="complete")
-
-
-def _attach_st12_oracle() -> None:
-    """st12 shares st3's oracle — ONE SQL definition of the session
-    table, checked against both the batch and the real streaming
-    path (same single-source pattern as st11/pl2)."""
-    import dataclasses
-
-    from a3_fp_bigdata_spark import registry as _R
-    from a3_fp_bigdata_spark.streaming import batch_windows  # noqa: F401
-    # ^ importing guarantees st3 is registered even when ingest is
-    #   imported standalone (registry loads modules alphabetically,
-    #   but direct importers need the twin pulled in explicitly)
-
-    rq = _R._REGISTRY["st12_stream_session_window"]
-    st3 = _R._REGISTRY.get("st3_session_window")
-    if rq.oracle is None and st3 is not None and st3.oracle:
-        _R._REGISTRY["st12_stream_session_window"] = dataclasses.replace(
-            rq, oracle=st3.oracle
-        )
-
-
-_attach_st12_oracle()

@@ -26,12 +26,12 @@ equivalent with the failure mode stated rather than hidden.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from a3_fp_bigdata_spark.data import scratch_dir
 from a3_fp_bigdata_spark.functions.rounding import half_up
 from a3_fp_bigdata_spark.operators.upsert import merge_upsert
 
@@ -158,7 +158,7 @@ def materialized_view_sink(
     """Maintain ``out_dir`` as the materialized result of a streaming
     aggregate. ``agg_stream`` must be a keyed aggregation; update output
     mode delivers only the keys whose values changed in each batch."""
-    cp = checkpoint_dir or tempfile.mkdtemp(prefix="a3_mv_cp_")
+    cp = checkpoint_dir or scratch_dir("a3_mv_cp_")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_batch_into(spark, batch_df, key, out_dir, num_buckets)

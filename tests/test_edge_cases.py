@@ -643,10 +643,8 @@ def test_d6_gemm_audit_lossless_and_canonical(spark):
     import pyarrow.parquet as pq
 
     from a3_fp_bigdata_spark import registry
-    from a3_fp_bigdata_spark.operators.similarity import (
-        _D6_AUDIT_SCRATCH,
-        NEARDUP_COSINE,
-    )
+    from a3_fp_bigdata_spark.data import run_scratch
+    from a3_fp_bigdata_spark.operators.similarity import NEARDUP_COSINE
 
     qs = registry.all_queries()
     r = qs["d6_gemm_audit"](spark, SF0001).collect()[0]
@@ -666,7 +664,9 @@ def test_d6_gemm_audit_lossless_and_canonical(spark):
 
     # lossless pruning, checked against the INDEPENDENT set: every true
     # pair must be in the materialized candidate scratch
-    cand = pq.read_table(_D6_AUDIT_SCRATCH, columns=["vec_a", "vec_b"])
+    cand = pq.read_table(
+        run_scratch("d6_gemm_cands"), columns=["vec_a", "vec_b"]
+    )
     cand_pairs = set(
         zip(cand["vec_a"].to_pylist(), cand["vec_b"].to_pylist())
     )

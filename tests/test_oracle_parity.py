@@ -97,48 +97,56 @@ def test_oracle_keys_subset():
     assert set(ORACLES) <= set(ALL)
 
 
-def test_read_stamped_scratch_guards_torn_reads(spark, tmp_path):
-    """read_stamped_scratch is the Spark-side twin of the oracles'
-    `WHERE n_src = count(*)` staleness guard (r10 ADVICE: the guard
-    was oracle-only, leaving the Spark read-back asymmetric). A clean
-    single-generation scratch passes through intact; a torn read
-    mixing rows from two generations yields ZERO rows — a loud
-    row-count disagreement, never silent mixed-generation bytes."""
+def test_read_stamped_scratch_guards_torn_reads(spark, monkeypatch):
+    """attest's count-flavour read-back goes through
+    read_stamped_scratch, the Spark-side twin of the oracles'
+    single-generation guard (r10 ADVICE: the guard was oracle-only,
+    leaving the Spark read-back asymmetric). A clean single-generation
+    scratch passes through intact; a torn read mixing rows from two
+    generations yields ZERO rows — a loud row-count disagreement,
+    never silent mixed-generation bytes. The torn state is a
+    concurrent writer appending its generation between attest's write
+    and its read-back."""
     from pyspark.sql import functions as F
 
-    from a3_fp_bigdata_spark.data import read_stamped_scratch
+    from a3_fp_bigdata_spark import data as D
 
-    path = str(tmp_path / "scratch.parquet")
-    gen_a = spark.range(3).select(
-        F.col("id").alias("media_id"), F.lit(3).cast("long").alias("n_src")
-    )
-    gen_a.coalesce(1).write.mode("overwrite").parquet(path)
-    clean = read_stamped_scratch(spark, path)
+    real_read = D.read_stamped_scratch
+    foreign = []
+
+    def torn_read(spark_, path):
+        for rows in foreign:
+            rows.coalesce(1).write.mode("append").parquet(path)
+        return real_read(spark_, path)
+
+    monkeypatch.setattr(D, "read_stamped_scratch", torn_read)
+
+    gen_a = spark.range(3).select(F.col("id").alias("media_id"))
+    clean = D.attest(spark, "torn_read_probe", gen_a)
     assert clean.count() == 3
     assert "n_src" not in clean.columns
 
     # torn read: a second generation's rows (different stamp) landed
     # beside generation A's — totals match neither stamp
-    gen_b = spark.range(5).select(
-        (F.col("id") + 100).alias("media_id"),
-        F.lit(5).cast("long").alias("n_src"),
+    foreign.append(
+        spark.range(5).select(
+            (F.col("id") + 100).alias("media_id"),
+            F.lit(5).cast("long").alias("n_src"),
+        )
     )
-    gen_b.coalesce(1).write.mode("append").parquet(path)
-    assert read_stamped_scratch(spark, path).count() == 0
+    assert D.attest(spark, "torn_read_probe", gen_a).count() == 0
 
     # ADVICE r11 — the coincidence case the count-equality alone would
-    # pass: 4 rows stamped 5 plus 1 row stamped 4 totals 5, matching
-    # generation B's stamp. countDistinct(n_src) == 1 must kill it.
-    path2 = str(tmp_path / "coincidence.parquet")
-    four_of_b = spark.range(4).select(
-        F.col("id").alias("media_id"), F.lit(5).cast("long").alias("n_src")
-    )
-    one_of_a = spark.range(1).select(
-        (F.col("id") + 50).alias("media_id"),
-        F.lit(4).cast("long").alias("n_src"),
-    )
-    four_of_b.unionByName(one_of_a).coalesce(1).write.parquet(path2)
-    assert read_stamped_scratch(spark, path2).count() == 0
+    # pass: 4 rows stamped 5 plus 1 row stamped 1 totals 5, matching
+    # the foreign generation's stamp. countDistinct(n_src) == 1 must
+    # kill it.
+    foreign[:] = [
+        spark.range(4).select(
+            F.col("id").alias("media_id"), F.lit(5).cast("long").alias("n_src")
+        )
+    ]
+    one_row = spark.range(1).select((F.col("id") + 50).alias("media_id"))
+    assert D.attest(spark, "torn_read_probe", one_row).count() == 0
 
 
 def test_audit_scratch_stale_sf_red_flags(spark):
@@ -176,9 +184,9 @@ def test_audit_scratch_stale_sf_red_flags(spark):
     import pyarrow.parquet as pq
     import pyarrow.compute as pc
 
-    from a3_fp_bigdata_spark.operators.aggregates import _A19_SCRATCH
+    from a3_fp_bigdata_spark.data import run_scratch
 
-    files = glob.glob(f"{_A19_SCRATCH}/*.parquet")
+    files = glob.glob(f"{run_scratch('a19_approx_audit')}/*.parquet")
     assert files, "a19 scratch missing after the fresh run"
     for fpath in files:
         t = pq.read_table(fpath)

@@ -761,6 +761,7 @@ def test_pk16_bfd_matches_python_replica_and_certificate(spark):
     certificate columns must all hold: budget respected, oversize docs
     isolated, at most one half-empty bin per shard."""
     from tests.conftest import SF0001
+    from a3_fp_bigdata_spark.data import run_scratch
     from a3_fp_bigdata_spark.operators import packing as PK
 
     costs = {
@@ -792,7 +793,7 @@ def test_pk16_bfd_matches_python_replica_and_certificate(spark):
     }
     got = {
         r["doc_id"]: (r["shard"], r["bin_id"])
-        for r in spark.read.parquet(PK._PK16_SCRATCH)
+        for r in spark.read.parquet(run_scratch("pk16_bfd"))
         .select("doc_id", "shard", "bin_id")
         .collect()
     }

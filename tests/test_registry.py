@@ -229,3 +229,56 @@ def test_release_stages_unpersists_dataframe_values(spark):
     assert df.storageLevel == StorageLevel.MEMORY_AND_DISK
     registry.release_stages("t_df")
     assert df.storageLevel == StorageLevel.NONE
+
+
+def test_oracle_builder_called_once_after_modules_load():
+    calls: list[int] = []
+
+    def build() -> str:
+        calls.append(1)
+        return "SELECT 1 AS one"
+
+    registry.query("t_builder", oracle=build)(lambda spark, sf_dir: None)
+    try:
+        assert registry.all_oracles()["t_builder"] == "SELECT 1 AS one"
+        assert registry.get("t_builder").oracle == "SELECT 1 AS one"
+        assert calls == [1]
+    finally:
+        registry._REGISTRY.pop("t_builder")
+
+
+def test_standalone_module_import_resolves_shared_oracle():
+    """A module imported on its own must not depend on another module's
+    registration order: st14 reuses dq4's oracle builder."""
+    import subprocess
+    import sys
+
+    code = (
+        "import a3_fp_bigdata_spark.streaming.drift\n"
+        "from a3_fp_bigdata_spark.registry import get\n"
+        "sql = get('st14_stream_embedding_drift').oracle\n"
+        "assert sql and sql == get('dq4_embedding_drift').oracle\n"
+    )
+    subprocess.run([sys.executable, "-c", code], check=True, timeout=300)
+
+
+def _library_files_containing(needle: str) -> list[str]:
+    """a3_fp_bigdata_spark/**/*.py paths (package-relative) whose source
+    contains ``needle``."""
+    from pathlib import Path
+
+    root = Path(registry.__file__).parent
+    return [
+        str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+        if needle in p.read_text()
+    ]
+
+
+def test_only_registry_touches_the_registry_table():
+    # oracles that need other modules register a builder instead
+    assert _library_files_containing("_REGISTRY") == ["registry.py"]
+
+
+def test_only_data_stamps_audit_scratch():
+    # every audit-scratch write goes through data.attest
+    assert _library_files_containing('alias("n_src")') == ["data.py"]

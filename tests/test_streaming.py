@@ -542,3 +542,19 @@ def test_st14_streaming_converges_to_batch_dq4(spark):
     }
     assert stream_rows == batch_rows
     assert stream_rows  # non-vacuous
+
+
+def test_st9_scratch_dirs_registered_and_removed(spark, monkeypatch):
+    """st9's view dir and its checkpoint dir are per-call temp dirs; both
+    must be registered for the process-exit cleanup, and that cleanup
+    removes them."""
+    from a3_fp_bigdata_spark import data as D
+
+    monkeypatch.setattr(D, "_RUN_SCRATCH_DIRS", [])
+    assert ingest.st9_materialized_view(spark, SF0001).count() > 0
+    dirs = list(D._RUN_SCRATCH_DIRS)
+    prefixes = sorted(os.path.basename(d).split("_")[2] for d in dirs)
+    assert prefixes == ["cp", "q"], dirs
+    assert all(os.path.isdir(d) for d in dirs)
+    D._cleanup_run_scratch()
+    assert not any(os.path.exists(d) for d in dirs)

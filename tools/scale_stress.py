@@ -302,10 +302,10 @@ def microbatch_overhead_probe(spark, src_dir: str, nfiles: int = 40) -> dict:
     from a3_fp_bigdata_spark.data import table as _table
     from a3_fp_bigdata_spark.schemas import TESTDATA
     from a3_fp_bigdata_spark.streaming.hot_keys import hot_key_sink
-    from a3_fp_bigdata_spark.streaming.incremental_dedup import _scratch_dir
+    from a3_fp_bigdata_spark.data import scratch_dir
     from a3_fp_bigdata_spark.streaming.ingest import streaming_shuffle
 
-    stage = _scratch_dir("a3_probe_stage_")
+    stage = scratch_dir("a3_probe_stage_")
     _table(spark, src_dir, "documents").repartition(
         nfiles, "doc_id"
     ).write.mode("overwrite").parquet(stage)
@@ -332,7 +332,7 @@ def microbatch_overhead_probe(spark, src_dir: str, nfiles: int = 40) -> dict:
         lambda s: s.writeStream.foreachBatch(
             lambda df, bid: df.count()
         )
-        .option("checkpointLocation", _scratch_dir("a3_probe_cp_"))
+        .option("checkpointLocation", scratch_dir("a3_probe_cp_"))
         .trigger(availableNow=True)
         .start()
     )
@@ -340,8 +340,8 @@ def microbatch_overhead_probe(spark, src_dir: str, nfiles: int = 40) -> dict:
         lambda s: hot_key_sink(
             s,
             spark,
-            _scratch_dir("a3_probe_out_"),
-            checkpoint_dir=_scratch_dir("a3_probe_cp2_"),
+            scratch_dir("a3_probe_out_"),
+            checkpoint_dir=scratch_dir("a3_probe_cp2_"),
         )
     )
 

@@ -2,8 +2,7 @@
 
 tools/scale_stress.py regenerates the measured tables, but SCALE.md also
 carries hand-written analysis sections (currently the "### st10
-per-batch attribution" block, measured once by tools/st10_breakdown.py
-and kept verbatim) that a plain regeneration would drop — rounds 6-7
+per-batch attribution" block, measured once and kept verbatim) that a plain regeneration would drop — rounds 6-7
 re-spliced them by hand, which is exactly the kind of step that gets
 forgotten.
 
